@@ -1,10 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
-import graft.Transaction
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
 import graft.ingest.Json
 import graft.operators.Ecommerce
 import graft.sinks.JdbcUpsert
@@ -28,26 +30,20 @@ import graft.sinks.JdbcUpsert.ConnConfig
   *     unlike a per-batch delta + additive upsert, which double-counts.
   * Kafka serves multiple consumers from the page cache; the extra reads
   * are projection-pruned to the few columns each pipeline needs. State is
-  * unwindowed and grows with key cardinality — exactly like the reference
-  * (no watermark, `DataStreamJob.java:98`); cardinality here is
-  * categories/days/months, i.e. tiny. For unbounded keys use the
-  * watermarked variants in `Windows` instead.
-  *
-  * [[startAllSharedSource]] is the SINGLE-READ form of the same job
-  * (SURVEY §3 option (a), reference parity `DataStreamJob.java:113-163`):
-  * one query, one source read per micro-batch, all three running-total
-  * families in one composite-key `flatMapGroupsWithState`, all four
-  * tables written per batch from one persisted frame. Same DB end-state
-  * (SharedSourceStreamSpec proves it batch-for-batch); pick by trade —
-  * read amplification (shared) vs per-pipeline isolation (four-query).
+  * unwindowed, exactly like the reference (no watermark,
+  * `DataStreamJob.java:98`), so it grows with key cardinality: one entry
+  * per category, per day and per month ever seen, which for a wide
+  * category space over years of dates is far from small. For unbounded
+  * keys use the watermarked variants in `Windows` instead.
   */
 object EcommerceStreamJob {
 
   /** Config surface mirroring the reference's parameters
     * (`DataStreamJob.java:71-78`: kafka servers, topic, group, db url/user/
     * password — note the reference swaps user/password keys at `:108-109`;
-    * we do not reproduce that bug). */
-  /** `checkpointRoot` is deliberately required (no default): the
+    * we do not reproduce that bug).
+    *
+    * `checkpointRoot` is deliberately required (no default): the
     * running totals live in the checkpointed state store, and a
     * non-durable location (e.g. /tmp) means a host restart resets the
     * totals and the replace-upserts then overwrite the accumulated DB
@@ -69,16 +65,9 @@ object EcommerceStreamJob {
       db: ConnConfig = ConnConfig("jdbc:postgresql://localhost:5432/postgres",
         "postgres", "postgres"))
 
-  /** S1: Kafka source (`DataStreamJob.java:89-95`). Value-only consumption,
-    * latest offsets — matching `OffsetsInitializer.latest()`.
-    *
-    * NOTE: requires the `spark-sql-kafka-0-10` connector on the runtime
-    * classpath (standard on any Spark distribution with Kafka support;
-    * NOT present in this offline build environment, where tests drive
-    * the same pipelines through MemoryStream / `fileSource`). */
   /** The exact reader options `kafkaSource` passes to the connector —
     * split out as a pure function so the wiring contract is testable
-    * without a broker or the connector jar (KafkaContractSpec). What
+    * without a broker or the connector jar (KafkaIntegrationSpec). What
     * remains unverified offline is only the connector's own behavior
     * (broker I/O, offset tracking), not our option plumbing. */
   def kafkaSourceOptions(cfg: JobConfig): Map[String, String] = {
@@ -89,6 +78,13 @@ object EcommerceStreamJob {
     if (cfg.groupId.nonEmpty) base + ("kafka.group.id" -> cfg.groupId) else base
   }
 
+  /** S1: Kafka source (`DataStreamJob.java:89-95`). Value-only consumption,
+    * latest offsets — matching `OffsetsInitializer.latest()`.
+    *
+    * NOTE: requires the `spark-sql-kafka-0-10` connector on the runtime
+    * classpath (standard on any Spark distribution with Kafka support;
+    * NOT a dependency of this build, so tests drive the same pipelines
+    * through MemoryStream / `fileSource`). */
   def kafkaSource(spark: SparkSession, cfg: JobConfig): DataFrame =
     spark.readStream
       .format("kafka")
@@ -145,10 +141,6 @@ object EcommerceStreamJob {
 
   // ---- wiring ----
 
-  private def upsertEachBatch(table: String, keys: Seq[String], cfg: JobConfig)(
-      batch: DataFrame, batchId: Long): Unit =
-    JdbcUpsert.upsert(batch, table, keys, cfg.db)
-
   /** The four pipelines of the job as (queryName, transform, outputMode,
     * targetTable, upsertKeys) — the single topology description both
     * `startAll` (JDBC) and tests (captured sinks) wire up.
@@ -165,18 +157,30 @@ object EcommerceStreamJob {
 
   /** Start the full topology with a custom per-batch sink — the test
     * seam. `sink(table, keys)(batchDf, batchId)` is invoked per
-    * micro-batch of each pipeline. */
+    * micro-batch of each pipeline. All or nothing: if any `start()`
+    * throws, the queries already started are stopped before the error
+    * propagates, so a failed start leaves no query running. */
   def startAllWithSink(spark: SparkSession, cfg: JobConfig, source: DataFrame)(
       sink: (String, Seq[String]) => (DataFrame, Long) => Unit): Seq[StreamingQuery] = {
     val tx = parse(source)
-    pipelines.map { case (name, transform, mode, table, keys) =>
-      transform(tx).writeStream
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", s"${cfg.checkpointRoot}/$name")
-        .trigger(Trigger.ProcessingTime(cfg.triggerMs))
-        .foreachBatch(sink(table, keys))
-        .start()
+    val started = ArrayBuffer.empty[StreamingQuery]
+    try {
+      pipelines.foreach { case (name, transform, mode, table, keys) =>
+        started += transform(tx).writeStream
+          .queryName(name)
+          .outputMode(mode)
+          .option("checkpointLocation", s"${cfg.checkpointRoot}/$name")
+          .trigger(Trigger.ProcessingTime(cfg.triggerMs))
+          .foreachBatch(sink(table, keys))
+          .start()
+      }
+      started.toSeq
+    } catch {
+      case NonFatal(e) =>
+        started.foreach { q =>
+          try q.stop() catch { case NonFatal(s) => e.addSuppressed(s) }
+        }
+        throw e
     }
   }
 
@@ -187,149 +191,7 @@ object EcommerceStreamJob {
       source: Option[DataFrame] = None): Seq[StreamingQuery] = {
     JdbcUpsert.runDdl(cfg.db)
     startAllWithSink(spark, cfg, source.getOrElse(kafkaSource(spark, cfg))) {
-      (table, keys) => upsertEachBatch(table, keys, cfg) _
-    }
-  }
-
-  // ---- single-read fan-out topology (SURVEY §3 option (a)) ----
-  //
-  // [[startAll]] runs FOUR independent queries over the topic — simple,
-  // isolated, but 4× source read amplification and 4 consumer groups
-  // where the reference reads once and fans out inside one dataflow
-  // (DataStreamJob.java:113-163). The shared-source topology below is
-  // that reference shape: ONE query, ONE source read per micro-batch.
-  // Spark's one-streaming-aggregation-per-query limit is sidestepped by
-  // observing that the three running totals are ONE keyed-state
-  // computation over a composite (kind, key) space — a single
-  // `flatMapGroupsWithState` maintains all three total families, and
-  // the raw copy rides the same stream as stateless passthrough rows.
-  // Per batch the sink receives the union of touched rows and writes
-  // all four tables from one persisted frame.
-  //
-  // The trade: the fan-out costs one keyed shuffle of the batch
-  // (4 rows per transaction — three skinny agg contributions plus the
-  // raw struct), where the four-query form costs three extra source
-  // reads + three shuffles of the skinny contributions. Against a real
-  // broker the single read wins (network + page-cache pressure, one
-  // consumer group); the four-query form remains the isolation variant
-  // (one pipeline's failure/checkpoint never stalls another).
-
-  /** One row of the composite-key fan-in stream: each parsed
-    * transaction contributes one `raw` passthrough row plus three agg
-    * contributions (`cat` / `day` / `mon`). Calendar fields are
-    * computed with the SAME Spark SQL expressions the batch pipelines
-    * use (`to_date` / `month` / `year`), so values match bit-for-bit. */
-  final case class FanRow(kind: String, key: String, date: java.sql.Date,
-      year: Int, amount: Double, tx: Option[Transaction])
-
-  /** Running state per (kind, key): first-seen date/year + total —
-    * exactly the reference's reduce state (first-seen quirks included:
-    * category pins its first date, month its first year). */
-  final case class FanState(date: java.sql.Date, year: Int, total: Double)
-
-  /** Updated row emitted per touched (kind, key) per micro-batch. */
-  final case class FanOut(kind: String, key: String, date: java.sql.Date,
-      year: Int, total: Double, tx: Option[Transaction])
-
-  /** Explode parsed transactions into the composite-key stream. */
-  def fanIn(tx: DataFrame): Dataset[FanRow] = {
-    val spark = tx.sparkSession
-    import spark.implicits._
-    tx.select(
-        struct(tx.columns.map(col): _*).as("_1"),
-        to_date(col("transactionDate")).as("_2"),
-        month(col("transactionDate")).as("_3"),
-        year(col("transactionDate")).as("_4"),
-        col("productCategory").as("_5"),
-        col("totalAmount").as("_6"),
-        col("transactionId").as("_7"))
-      .as[(Transaction, java.sql.Date, Int, Int, String, Double, String)]
-      .flatMap { case (t, d, m, y, cat, amt, tid) => Seq(
-        FanRow("raw", tid, d, y, amt, Some(t)),
-        FanRow("cat", cat, d, y, amt, None),
-        FanRow("day", d.toString, d, y, amt, None),
-        FanRow("mon", m.toString, d, y, amt, None))
-      }
-  }
-
-  /** The single state operator: running totals for all three agg
-    * families plus stateless raw passthrough, in one keyed shuffle.
-    * Update-mode emission — only (kind, key) groups touched by the
-    * batch emit, carrying the full running total (the same convergence
-    * contract as the four-query topology's update-mode aggs). */
-  def fanState(rows: Dataset[FanRow]): Dataset[FanOut] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.groupByKey(r => (r.kind, r.key))
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (k: (String, String), it: Iterator[FanRow],
-            state: GroupState[FanState]) =>
-          val (kind, key) = k
-          if (kind == "raw") {
-            // stateless passthrough: no state entry is ever written, so
-            // per-transaction keys cost nothing beyond the shuffle
-            it.map(r => FanOut("raw", key, r.date, r.year, r.amount, r.tx))
-          } else {
-            var st = state.getOption.orNull
-            it.foreach { r =>
-              st = if (st == null) FanState(r.date, r.year, r.amount)
-              else st.copy(total = st.total + r.amount)
-            }
-            state.update(st)
-            Iterator.single(FanOut(kind, key, st.date, st.year, st.total, None))
-          }
-      }
-  }
-
-  /** Start the single-read topology with a custom per-batch sink (the
-    * same sink seam as [[startAllWithSink]], so specs drive both
-    * topologies identically). One streaming query; per micro-batch the
-    * union of touched rows is PERSISTED once and all four tables are
-    * written from it — re-evaluation of the batch frame (the foreachBatch
-    * caveat) can never re-read the source. */
-  def startSharedSourceWithSink(spark: SparkSession, cfg: JobConfig,
-      source: DataFrame)(
-      sink: (String, Seq[String]) => (DataFrame, Long) => Unit): StreamingQuery =
-    fanState(fanIn(parse(source))).toDF().writeStream
-      .queryName("shared_source")
-      .outputMode("update")
-      .option("checkpointLocation", s"${cfg.checkpointRoot}/shared_source")
-      .trigger(Trigger.ProcessingTime(cfg.triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val df = batch.persist()
-        try {
-          sink("transactions", Seq("transaction_id"))(
-            rawForDb(df.filter(col("kind") === "raw").select(col("tx.*"))),
-            batchId)
-          sink("sales_per_category", Seq("transaction_date", "category"))(
-            df.filter(col("kind") === "cat").select(
-              col("date").as("transaction_date"),
-              col("key").as("category"),
-              col("total").as("total_sales")), batchId)
-          sink("sales_per_day", Seq("transaction_date"))(
-            df.filter(col("kind") === "day").select(
-              col("date").as("transaction_date"),
-              col("total").as("total_sales")), batchId)
-          sink("sales_per_month", Seq("year", "month"))(
-            df.filter(col("kind") === "mon").select(
-              col("year"),
-              col("key").cast("int").as("month"),
-              col("total").as("total_sales")), batchId)
-        } finally {
-          df.unpersist()
-          ()
-        }
-      }
-      .start()
-
-  /** [[startAll]]'s single-read sibling: DDL once, then ONE streaming
-    * query upserting all four tables per micro-batch. */
-  def startAllSharedSource(spark: SparkSession, cfg: JobConfig,
-      source: Option[DataFrame] = None): StreamingQuery = {
-    JdbcUpsert.runDdl(cfg.db)
-    startSharedSourceWithSink(spark, cfg,
-      source.getOrElse(kafkaSource(spark, cfg))) {
-      (table, keys) => upsertEachBatch(table, keys, cfg) _
+      (table, keys) => (batch, _) => JdbcUpsert.upsert(batch, table, keys, cfg.db)
     }
   }
 }

@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.operators.Ecommerce
 import graft.streaming.EcommerceStreamJob
 import graft.streaming.EcommerceStreamJob.JobConfig
 
@@ -23,18 +22,17 @@ class EndToEndStreamSpec extends SparkSpec {
        |"customerId":"c1","transactionDate":"$ts",
        |"paymentMethod":"credit_card"}""".stripMargin.replaceAll("\n", "")
 
-  test("file source drives all four pipelines into upsert end-state") {
+  /** captured "database": table -> key -> row (last write wins = upsert). */
+  private type Db = TrieMap[String, TrieMap[Seq[Any], Seq[Any]]]
+
+  /** Runs the four-query topology through the captured sink, landing
+    * each element of `batches` as one file and draining all queries
+    * before the next lands, so each file is its own micro-batch. */
+  private def runCaptured(batches: Seq[Seq[String]]): Db = {
     val dir: Path = Files.createTempDirectory("graft-e2e-src")
     val ckpt: Path = Files.createTempDirectory("graft-e2e-ckpt")
-    Files.writeString(dir.resolve("batch1.json"), Seq(
-      jsonTx("t1", "electronic", 10.0, "2024-11-08T10:00:00.000000"),
-      jsonTx("t2", "fashion", 4.0, "2024-11-08T11:00:00.000000"),
-      jsonTx("t3", "electronic", 2.5, "2024-11-09T09:00:00.000000"),
-      jsonTx("t1", "electronic", 10.0, "2024-11-08T10:00:00.000000") // replay
-    ).mkString("\n"))
-
-    // captured "database": table -> key -> row  (last write wins = upsert)
-    val db = TrieMap.empty[String, TrieMap[Seq[Any], Seq[Any]]]
+    val stage: Path = Files.createTempDirectory("graft-e2e-stage")
+    val db: Db = TrieMap.empty
     val cfg = JobConfig(checkpointRoot = ckpt.toString, triggerMs = 50L)
     val source = EcommerceStreamJob.fileSource(spark, dir.toString)
 
@@ -49,8 +47,24 @@ class EndToEndStreamSpec extends SparkSpec {
         }
     }
     try {
-      queries.foreach(_.processAllAvailable())
+      batches.zipWithIndex.foreach { case (lines, i) =>
+        // write beside the watched dir, then move in whole: the source
+        // never lists a half-written file
+        val tmp = Files.writeString(stage.resolve(s"batch$i.json"), lines.mkString("\n"))
+        Files.move(tmp, dir.resolve(s"batch$i.json"), StandardCopyOption.ATOMIC_MOVE)
+        queries.foreach(_.processAllAvailable())
+      }
     } finally queries.foreach(_.stop())
+    db
+  }
+
+  test("file source drives all four pipelines into upsert end-state") {
+    val db = runCaptured(Seq(Seq(
+      jsonTx("t1", "electronic", 10.0, "2024-11-08T10:00:00.000000"),
+      jsonTx("t2", "fashion", 4.0, "2024-11-08T11:00:00.000000"),
+      jsonTx("t3", "electronic", 2.5, "2024-11-09T09:00:00.000000"),
+      jsonTx("t1", "electronic", 10.0, "2024-11-08T10:00:00.000000") // replay
+    )))
 
     // raw copy: replayed t1 upserts to a single row (PK transaction_id)
     assert(db("transactions").size === 3)
@@ -63,6 +77,60 @@ class EndToEndStreamSpec extends SparkSpec {
     val month = db("sales_per_month")
     assert(month.size === 1) // all Nov-2024
     assert(month.head._2.last === 26.5)
+  }
+
+  test("running totals carry across micro-batches: first-seen keys pinned, replay collapses") {
+    // every category sees ONE distinct date per batch, so the first-seen
+    // date is deterministic (within-batch first() order depends on
+    // parallelism). Batch 2 re-keys electronic under a LATER date, adds
+    // a fresh category and a December row (new month bucket), and
+    // replays t1 (the raw upsert collapses it).
+    val db = runCaptured(Seq(
+      Seq(
+        jsonTx("t1", "electronic", 10.0, "2024-11-08T10:00:00.000000"),
+        jsonTx("t2", "fashion", 4.0, "2024-11-08T11:00:00.000000"),
+        jsonTx("t3", "electronic", 2.5, "2024-11-08T12:00:00.000000")),
+      Seq(
+        jsonTx("t4", "electronic", 5.0, "2024-11-09T09:00:00.000000"),
+        jsonTx("t5", "grocery", 1.5, "2024-12-01T08:00:00.000000"),
+        jsonTx("t1", "electronic", 10.0, "2024-11-08T10:00:00.000000"))))
+
+    // category key is (transaction_date, category): the first-seen date
+    // stays pinned when a later batch sees the category under a new date
+    val cat = db("sales_per_category")
+      .map { case (k, v) => (k(1), (k.head.toString, v.last)) }
+    assert(cat === Map(
+      "electronic" -> (("2024-11-08", 27.5)), // 10 + 2.5 + 5 + 10 (replay)
+      "fashion" -> (("2024-11-08", 4.0)),
+      "grocery" -> (("2024-12-01", 1.5))))
+    assert(db("transactions").size === 5) // replayed t1 collapsed
+    // month key is (year, month): December opens its own bucket with
+    // its first-seen year
+    val month = db("sales_per_month")
+      .map { case (k, v) => k(1) -> (k.head, v.last) }
+    assert(month === Map(
+      11 -> ((2024, 31.5)), // 16.5 (batch 1) + 5 + 10 (batch 2 incl. replay)
+      12 -> ((2024, 1.5))))
+  }
+
+  test("a failed start stops the queries it already started") {
+    import spark.implicits._
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val before = spark.streams.active.map(_.id).toSet
+    // an active query already holds the third pipeline's name, so that
+    // pipeline's start() is rejected after the first two have started
+    val holder = MemoryStream[Int].toDF().writeStream
+      .format("noop").queryName("sales_per_day").start()
+    try {
+      val dir = Files.createTempDirectory("graft-e2e-clash-src")
+      val ckpt = Files.createTempDirectory("graft-e2e-clash-ckpt")
+      val cfg = JobConfig(checkpointRoot = ckpt.toString, triggerMs = 50L)
+      intercept[IllegalArgumentException] {
+        EcommerceStreamJob.startAllWithSink(spark, cfg,
+          EcommerceStreamJob.fileSource(spark, dir.toString))((_, _) => (_, _) => ())
+      }
+      assert(spark.streams.active.map(_.id).toSet === before + holder.id)
+    } finally holder.stop()
   }
 
   test("startAll executes the WHOLE job against a (fake) database: DDL + real JDBC writer") {
