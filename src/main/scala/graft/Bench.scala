@@ -36,19 +36,7 @@ object Bench {
     // The driver never sets it, so official artifacts always cover the
     // full suite.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // a typo'd filter must fail loudly, not print an official-looking
-    // 0.0-total artifact that would trivially pass a 2×-of-baseline gate
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.mkString(", ")}")
-      require(names.nonEmpty, "SPARK_GRAFT_ONLY is set but names no queries")
-    }
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
+    val selected = only.map(SparkEntry.selectQueries).getOrElse(SparkEntry.queries)
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt)
     def once(): Map[String, Double] =
       selected.map { case (name, fn) => name -> time(name, fn) }

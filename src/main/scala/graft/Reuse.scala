@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** The engine's shared materialization / lineage-cut primitive.
   *
@@ -19,16 +18,17 @@ import org.apache.spark.storage.StorageLevel
   *    `<java.io.tmpdir>/graft-checkpoints`): survives executor loss,
   *    re-readable by any executor; the mode a 1000-executor run wants
   *    for corpus-derived artifacts. Costs a write to shared storage.
-  *  - `persist` — `persist(DISK_ONLY)` + eager count: spill-backed
-  *    cache with locality preference. NOTE: persist does not CUT
-  *    lineage, it only caches blocks — iterative loops still grow
-  *    their plans, and recovery after executor loss recomputes from
-  *    source. The cheap middle ground for moderate reuse.
+  *
+  * Both modes cut the logical lineage (the result is a `LogicalRDD`
+  * leaf), so iterative loops never grow their plans. Superseded
+  * rounds need no release: once unreferenced, their blocks are
+  * reclaimed by the ContextCleaner.
   *
   * Mode is read per call from the session conf
   * (`spark.graft.reuse.mode`), falling back to the
   * `SPARK_GRAFT_REUSE_MODE` env var (so Verify/Bench runs can select a
-  * mode without code changes), then to `local`.
+  * mode without code changes), then to `local`. Any other value fails
+  * loudly.
   */
 object Reuse {
   val ModeKey = "spark.graft.reuse.mode"
@@ -39,76 +39,39 @@ object Reuse {
       .orElse(sys.env.get("SPARK_GRAFT_REUSE_MODE"))
       .getOrElse("local")
 
-  /** Materialize `df` eagerly (all modes: consumers NEVER re-derive)
+  /** Materialize `df` eagerly (both modes: consumers NEVER re-derive)
     * and return the reusable frame. */
   def materialize(df: DataFrame): DataFrame = mode(df) match {
     case "local" => df.localCheckpoint()
     case "reliable" =>
       val sc = df.sparkSession.sparkContext
       df.sparkSession.conf.getOption(DirKey) match {
-        // honor an explicitly configured dir (setCheckpointDir stores
-        // dir/<uuid>, so "already pointing there" is a prefix check)
-        case Some(dir) if !sc.getCheckpointDir.exists(_.startsWith(dir)) =>
+        // honor an explicitly configured dir: setCheckpointDir stores
+        // the QUALIFIED <dir>/<uuid>, so "already pointing there" is a
+        // prefix check against the qualified dir plus a separator (a
+        // sibling like <dir>2 must not match)
+        case Some(dir) if !sc.getCheckpointDir.exists(
+            _.startsWith(qualified(df, dir) + "/")) =>
           sc.setCheckpointDir(dir)
         case None if sc.getCheckpointDir.isEmpty =>
           sc.setCheckpointDir(s"${sys.props("java.io.tmpdir")}/graft-checkpoints")
         case _ => ()
       }
       df.checkpoint() // eager by default, like localCheckpoint
-    case "persist" =>
-      val p = df.persist(StorageLevel.DISK_ONLY)
-      p.count() // force materialization so the derivation runs once, now
-      // Cut the LOGICAL lineage (a LogicalRDD leaf over the cached
-      // physical plan, the same cut localCheckpoint makes): without
-      // it, iterative loops nest one AQE/InMemoryRelation layer per
-      // round and Spark's per-action plan stringification
-      // (SparkListenerSQLExecutionStart's physicalPlanDescription)
-      // walks the nested tree EXPONENTIALLY — a 10-round directed
-      // PageRank spent minutes in generateTreeString alone. Reads
-      // still hit the persisted blocks (the wrapped RDD is the cached
-      // scan, resolved through a FRESH QueryExecution so the cache
-      // lookup applies even if `df`'s own execution was forced before
-      // persist() ran); the leaf keeps the executed plan's
-      // outputPartitioning/outputOrdering (checkpoint-style), so
-      // repartition(col).materialized frames stay co-partitioned.
-      // Recovery semantics are unchanged — executor loss falls back to
-      // the RDD lineage, recomputing from source exactly like persist
-      // always did.
-      val wrapped = org.apache.spark.sql.graftglue.Bridge.lineageCut(p)
-      persistOriginals.put(wrapped, p)
-      wrapped
     case other => throw new IllegalArgumentException(
-      s"$ModeKey=$other (expected local | reliable | persist)")
+      s"$ModeKey=$other (expected local | reliable)")
   }
 
-  /** wrapped frame → the persisted original its [[release]] must
-    * unpersist (weak keys: an unreleased frame's entry clears with the
-    * frame itself; its cache entry then lives until session end, the
-    * pre-wrap behavior). */
-  private val persistOriginals =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[DataFrame, DataFrame]())
-
-  /** Release a SUPERSEDED materialized frame. Iterative loops
-    * (components, PageRank, BFS, LPA, k-core) materialize fresh state
-    * each round; in `persist` mode every superseded round would
-    * otherwise stay in the DISK_ONLY cache for the whole job — cache
-    * bloat that localCheckpoint/checkpoint never had (their blocks are
-    * reclaimed by the ContextCleaner once unreferenced). No-op in the
-    * other modes: a checkpointed frame another consumer may still read
-    * must not be torn down. Only call on frames this loop OWNS. */
-  def release(df: DataFrame): Unit =
-    if (mode(df) == "persist") {
-      // unpersist the ORIGINAL cached frame — the wrapped LogicalRDD
-      // frame's plan no longer matches any CacheManager entry
-      val orig = persistOriginals.remove(df)
-      (if (orig != null) orig else df).unpersist()
-      ()
-    }
+  /** `dir` qualified the way `SparkContext.setCheckpointDir` stores it
+    * (scheme + absolute path, no trailing slash). */
+  private def qualified(df: DataFrame, dir: String): String = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    fs.makeQualified(path).toString.stripSuffix("/")
+  }
 
   /** `df.materialized` sugar so call sites stay chain-shaped. */
   implicit class ReuseOps(private val df: DataFrame) extends AnyVal {
     def materialized: DataFrame = Reuse.materialize(df)
-    def released(): Unit = Reuse.release(df)
   }
 }

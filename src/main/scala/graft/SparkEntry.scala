@@ -286,6 +286,21 @@ object SparkEntry {
         damping = 0.85)
     }
 
+  /** The `SPARK_GRAFT_ONLY=q_a,q_b` subset of [[queries]] (the one
+    * parser Bench, Verify and ShuffleProbe share): comma-separated,
+    * blanks ignored. A name that is not registered, or a list naming
+    * none, fails loudly — a typo'd filter must not dump or time an
+    * empty or partial suite that looks official. */
+  def selectQueries(only: String): Map[String, (SparkSession, String) => DataFrame] = {
+    val names = only.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val all = queries
+    val unknown = names.diff(all.keySet)
+    require(unknown.isEmpty,
+      s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    require(names.nonEmpty, "SPARK_GRAFT_ONLY is set but names no queries")
+    all.filter { case (n, _) => names(n) }
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ----- reference parity: Pipeline B (M1/K1/R1, DataStreamJob.java:123-136)

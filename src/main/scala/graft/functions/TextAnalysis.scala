@@ -1976,40 +1976,36 @@ object TextAnalysis {
         .collect().map(r => (r.getString(0), r.getLong(1)))
       (top ++ singles).distinct.sortBy(_._1).toSeq
     }
-    try {
-      // seed: every substring of every distinct word (multiplicity
-      // preserved — 'aaa' contributes 'aa' twice), weighted by count
-      val subs = flatten(transform(
-        sequence(lit(1), length(col("word"))),
-        i => transform(
-          sequence(lit(1),
-            least(lit(maxPieceLen), length(col("word")) - i + lit(1))),
-          l => col("word").substr(i, l))))
-      val seedCounts = words
-        .select(col("n"), explode(subs).as("piece"))
+    // seed: every substring of every distinct word (multiplicity
+    // preserved — 'aaa' contributes 'aa' twice), weighted by count
+    val subs = flatten(transform(
+      sequence(lit(1), length(col("word"))),
+      i => transform(
+        sequence(lit(1),
+          least(lit(maxPieceLen), length(col("word")) - i + lit(1))),
+        l => col("word").substr(i, l))))
+    val seedCounts = words
+      .select(col("n"), explode(subs).as("piece"))
+      .groupBy("piece").agg(sum("n").as("cnt"))
+      .materialized
+    var vocab = selectVocab(seedCounts, seedSize)
+    // the corpus alphabet — single chars never leave the vocabulary
+    val chars = vocab.collect { case (p, c) if p.length == 1 => p }
+    val charsDf = chars.toDF("piece").withColumn("cnt", lit(1L))
+    for (_ <- 1 to rounds) {
+      val segCounts = words
+        .select(col("n"), explode(graft.expressions.UnigramSegment
+          .segment(col("word"), vocab)).as("piece"))
         .groupBy("piece").agg(sum("n").as("cnt"))
+      // char floor via max-merge: a char the E-step used keeps its
+      // real count (≥ 1); an unused char re-enters at count 1 — one
+      // candidate row per piece, exactly the oracle's ucand union
+      val cand = segCounts.unionByName(charsDf)
+        .groupBy("piece").agg(max("cnt").as("cnt"))
         .materialized
-      var vocab = selectVocab(seedCounts, seedSize)
-      seedCounts.released()
-      // the corpus alphabet — single chars never leave the vocabulary
-      val chars = vocab.collect { case (p, c) if p.length == 1 => p }
-      val charsDf = chars.toDF("piece").withColumn("cnt", lit(1L))
-      for (_ <- 1 to rounds) {
-        val segCounts = words
-          .select(col("n"), explode(graft.expressions.UnigramSegment
-            .segment(col("word"), vocab)).as("piece"))
-          .groupBy("piece").agg(sum("n").as("cnt"))
-        // char floor via max-merge: a char the E-step used keeps its
-        // real count (≥ 1); an unused char re-enters at count 1 — one
-        // candidate row per piece, exactly the oracle's ucand union
-        val cand = segCounts.unionByName(charsDf)
-          .groupBy("piece").agg(max("cnt").as("cnt"))
-          .materialized
-        vocab = selectVocab(cand, vocabSize)
-        cand.released()
-      }
-      vocab
-    } finally words.released()
+      vocab = selectVocab(cand, vocabSize)
+    }
+    vocab
   }
 
   /** [[unigramTrain]]'s result as a DataFrame (piece, cnt, score) for
@@ -2152,7 +2148,6 @@ object TextAnalysis {
         graft.expressions.UnigramSegment.segment(col("word"), uni)))
       .orderBy("tokenizer")
     val collected = out.collect()
-    words.released()
     spark.createDataFrame(
       spark.sparkContext.parallelize(collected.toIndexedSeq), out.schema)
       .orderBy("tokenizer")

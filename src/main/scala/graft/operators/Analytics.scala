@@ -133,7 +133,6 @@ object Analytics {
     // seed every rank at Infinity; fail loudly instead
     require(n > 0, "pageRank: edge list has no non-self-loop edges")
     var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    var prevRound: DataFrame = null
     for (i <- 1 to iterations) {
       val contribs = e
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
@@ -149,14 +148,7 @@ object Analytics {
       // cadence A/B'd in r16 (verdict #4): every-5 measured dead even
       // (q_pagerank 1.518 s vs 1.521 s, controls flat) — kept at 3,
       // which bounds the unmaterialized lineage chain at 3 rounds
-      if (i % 3 == 0 || i == iterations) {
-        ranks = ranks.materialized
-        // persist mode: superseded round state would otherwise sit in
-        // the DISK_ONLY cache for the whole job (no-op in local /
-        // reliable modes, whose blocks the ContextCleaner reclaims)
-        if (prevRound != null) graft.Reuse.release(prevRound)
-        prevRound = ranks
-      }
+      if (i % 3 == 0 || i == iterations) ranks = ranks.materialized
     }
     ranks
   }
@@ -206,12 +198,11 @@ object Analytics {
     require(n > 0, "pageRankDirected: edge list has no non-self-loop edges")
     var ranks = nodes.select(col("node"), col("odeg"),
       lit(1.0 / n).as("rank")).materialized
-    var prevRound: DataFrame = ranks
     for (i <- 1 to iterations) {
       // D as an IN-PLAN 1-row broadcast over the previous round's
       // materialized state. `ranks` is a LogicalRDD LEAF in every
-      // reuse mode (Reuse.materialize cuts the logical lineage even in
-      // persist mode since r14), so referencing it twice — dangling
+      // reuse mode (Reuse.materialize always cuts the logical
+      // lineage), so referencing it twice — dangling
       // aggregate + contribution join — duplicates an O(1) leaf, not a
       // growing subtree; the aggregate rides the SAME action as the
       // round's materialize instead of paying its own per-iteration
@@ -232,8 +223,6 @@ object Analytics {
           (lit((1.0 - damping) / n) + lit(damping) *
             (coalesce(col("s"), lit(0.0)) + col("__dm") / n)).as("rank"))
         .materialized // one action per round, dangling agg included
-      graft.Reuse.release(prevRound)
-      prevRound = ranks
     }
     ranks.select(col("node"), col("rank"))
   }
@@ -285,7 +274,6 @@ object Analytics {
       "pageRankDirectedWeighted: no positive-weight non-self-loop edges")
     var ranks = nodes.select(col("node"), col("wout"),
       lit(1.0 / n).as("rank")).materialized
-    var prevRound: DataFrame = ranks
     for (i <- 1 to iterations) {
       // in-plan 1-row dangling broadcast over the previous round's
       // LEAF — see pageRankDirected
@@ -303,8 +291,6 @@ object Analytics {
           (lit((1.0 - damping) / n) + lit(damping) *
             (coalesce(col("s"), lit(0.0)) + col("__dm") / n)).as("rank"))
         .materialized
-      graft.Reuse.release(prevRound)
-      prevRound = ranks
     }
     ranks.select(col("node"), col("rank"))
   }
@@ -355,7 +341,6 @@ object Analytics {
     val p = col("is_seed").cast("double") / nSeeds
     var ranks = nodes.select(col("node"), col("odeg"), col("is_seed"),
       p.as("rank")).materialized
-    var prevRound: DataFrame = ranks
     for (i <- 1 to iterations) {
       // in-plan 1-row dangling broadcast over the previous round's
       // LEAF — same fold-the-scalar-into-the-materialize-action shape
@@ -373,8 +358,6 @@ object Analytics {
           (lit(1.0 - damping) * p + lit(damping) *
             (coalesce(col("s"), lit(0.0)) + col("__dm") * p)).as("rank"))
         .materialized
-      graft.Reuse.release(prevRound)
-      prevRound = ranks
     }
     ranks.select(col("node"), col("rank"))
   }
@@ -408,13 +391,11 @@ object Analytics {
     require(!nodes.isEmpty, "hits: edge list has no non-self-loop edges")
     var hub = nodes.withColumn("h", lit(1.0)).materialized
     var auth: DataFrame = null
-    var prevH: DataFrame = hub
-    var prevA: DataFrame = null
     for (i <- 1 to iterations) {
       // each half-step: materialize the raw sums ONCE, then divide by
       // the L2 norm as an IN-PLAN 1-row broadcast over that
       // materialized LEAF (Reuse.materialize cuts the logical lineage
-      // in every mode since r14, so the double reference duplicates an
+      // in every mode, so the double reference duplicates an
       // O(1) leaf, not a growing subtree). The r14 form read the norm
       // back as a driver scalar — one extra per-half-step job whose
       // scheduling floor dominated the suite's HITS cost at local[32]
@@ -436,9 +417,6 @@ object Analytics {
         .crossJoin(broadcast(nhDf)) // 1 row by construction
         .select(col("node"),
           (coalesce(col("h0"), lit(0.0)) / col("__nh")).as("h"))
-      graft.Reuse.release(prevH)
-      if (prevA != null) graft.Reuse.release(prevA)
-      prevH = hRaw; prevA = aRaw
     }
     nodes.join(hub, Seq("node")).join(auth, Seq("node"))
       .select(col("node"), col("h").as("hub"), col("a").as("authority"))
@@ -690,7 +668,7 @@ object Analytics {
       rounds: Int = 8): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val und0 = edges
+    var und = edges
       .select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("e"))
@@ -698,26 +676,20 @@ object Analytics {
       .filter(col("src") =!= col("dst"))
       .distinct()
       .materialized
-    var und = und0
     var lastCount = -1L
     var survivors: DataFrame = null
-    var prevSurv: DataFrame = null
     var converged = false
     for (_ <- 1 to rounds if !converged) {
       val deg = und.groupBy(col("src").as("node")).count()
       survivors = deg.filter(col("count") >= k).materialized
-      if (prevSurv != null) graft.Reuse.release(prevSurv)
-      prevSurv = survivors
       val n = survivors.count()
       if (n == lastCount) converged = true
       else {
         lastCount = n
-        val newUnd = und
+        und = und
           .join(survivors.select(col("node").as("src")), Seq("src"))
           .join(survivors.select(col("node").as("dst")), Seq("dst"))
           .materialized
-        if (und ne und0) graft.Reuse.release(und)
-        und = newUnd
       }
     }
     require(converged, s"kCore did not converge in $rounds rounds — " +
@@ -754,7 +726,6 @@ object Analytics {
       .materialized
     val nodes = und.select(col("src").as("node")).distinct().materialized
     var labels = nodes.withColumn("community_id", col("node"))
-    var prevRound: DataFrame = null
     for (_ <- 1 to iterations) {
       val voted = und
         .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
@@ -766,10 +737,7 @@ object Analytics {
         .select(col("node"), col("win.l").as("community_id"))
       // every node has ≥ 1 neighbor (isolated nodes never enter the
       // edge list), so the vote covers all of `nodes`
-      val mat = voted.materialized
-      if (prevRound != null) graft.Reuse.release(prevRound)
-      prevRound = mat
-      labels = mat
+      labels = voted.materialized
     }
     labels
   }
@@ -1122,7 +1090,6 @@ object Analytics {
       .withColumn("hops", lit(0))
       .materialized
     var frontier = visited.select("node")
-    var prevNext: DataFrame = null
     var h = 1
     var exhausted = maxHops == 0
     while (!exhausted) {
@@ -1134,13 +1101,9 @@ object Analytics {
         .materialized
       val grew = next.limit(1).count() > 0
       if (grew) {
-        val newVisited = visited.unionAll(next).materialized
-        graft.Reuse.release(visited) // superseded (persist mode only)
-        visited = newVisited
-        if (prevNext != null) graft.Reuse.release(prevNext)
-        prevNext = next // still backs `frontier` for one more round
+        visited = visited.unionAll(next).materialized
         frontier = next.select("node")
-      } else graft.Reuse.release(next)
+      }
       h += 1
       exhausted = !grew || h > maxHops
     }

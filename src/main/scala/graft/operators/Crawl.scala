@@ -50,18 +50,11 @@ object Crawl {
         pages(urlCol) === col("__f"), "left_semi")
       val links = UrlOps.extractOutlinks(fetched, urlCol, htmlCol)
         .select(col("outlink").as("url")).distinct
-      val prevFrontier = frontier
-      val prevSeen = seen
       frontier = links.join(seen.select("url"), Seq("url"), "left_anti")
         .withColumn("hop", lit(h)).materialized
       seen = seen.unionByName(frontier).materialized
-      // superseded round state: reclaim eagerly in persist mode (the
-      // Reuse loop discipline — no-op in local/reliable)
-      prevSeen.released()
-      if (prevFrontier ne prevSeen) prevFrontier.released()
       h += 1
     }
-    if (frontier ne seen) frontier.released()
     seen
   }
 
@@ -96,16 +89,12 @@ object Crawl {
     for (_ <- 0 until rounds) {
       val b = m.select(col("src").as("__bs"), col("dst").as("__bd"),
         col("hops").as("__bh"))
-      val prev = m
       m = m.join(b, m("dst") === b("__bs"), "left")
         .select(col("src"), coalesce(col("__bd"), col("dst")).as("dst"),
           (col("hops") + coalesce(col("__bh"), lit(0L))).as("hops"))
         .materialized
-      prev.released()
     }
-    // resolved ⟺ the final url no longer redirects (not a source).
-    // m is NOT released: both sides of this join read it (the Reuse
-    // discipline releases only superseded round frames)
+    // resolved ⟺ the final url no longer redirects (not a source)
     val srcs = m.select(col("src").as("__t")).distinct
     m.join(srcs, m("dst") === col("__t"), "left")
       .select(col("src").as("url"), col("dst").as("final_url"),

@@ -1354,7 +1354,6 @@ object Dedup {
     }
     var labels = edges.select(col("src").as("node")).distinct()
       .withColumn("component_id", col("node"))
-    var prevRound: DataFrame = null
     var converged = false
     var rounds = 0 // diameter bound; dup clusters converge in 2-4 rounds
     while (!converged && rounds < maxRounds) {
@@ -1377,10 +1376,6 @@ object Dedup {
         .materialized // cut lineage; also materializes for the probe
       converged =
         next.filter(col("component_id") < col("prev")).limit(1).count() == 0
-      // persist mode: the superseded round's cache entry goes now
-      // (no-op under local/reliable — ContextCleaner owns those)
-      if (prevRound != null) graft.Reuse.release(prevRound)
-      prevRound = next
       labels = next.select("node", "component_id")
       rounds += 1
     }
@@ -1477,13 +1472,12 @@ object Dedup {
   def nearDupComponentsStar(df: DataFrame, idCol: String, pairs: DataFrame,
       maxRounds: Int = 30): DataFrame = {
     // canonical undirected edges (a < b), self-loops dropped
-    val undirected0 = pairs
+    var undirected = pairs
       .select(least(col("id_a"), col("id_b")).as("a"),
         greatest(col("id_a"), col("id_b")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
       .materialized
-    var undirected = undirected0
 
     var converged = false
     var rounds = 0
@@ -1520,7 +1514,6 @@ object Dedup {
       // localCheckpoint-materialized, so the extra count scans cache.
       converged = small.exceptAll(undirected).limit(1).count() == 0 &&
         small.count() == undirected.count()
-      if (undirected ne undirected0) graft.Reuse.release(undirected)
       undirected = small
       rounds += 1
     }

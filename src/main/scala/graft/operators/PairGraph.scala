@@ -17,8 +17,8 @@ import graft.Reuse.ReuseOps
   *
   * `of` memoizes the derived pair list per (session, key) and
   * materializes it eagerly via [[graft.Reuse]] (mode-selectable:
-  * executor-local checkpoint, reliable checkpoint dir, or DISK_ONLY
-  * persist — see that scaladoc for the durability trade), so:
+  * executor-local or reliable checkpoint — see that scaladoc for the
+  * durability trade), so:
   *  - the derivation executes exactly once per session per corpus;
   *  - every consumer's plan starts from the materialized edge list
   *    (bare id pairs — tiny next to the corpus), not from the
@@ -75,16 +75,11 @@ object PairGraph {
   }
 
   /** Forget everything (between probe corpora, or Bench's
-    * registry-cold pass). Releases each entry's backing storage where
-    * a synchronous release exists (`persist` mode unpersists the
-    * DISK_ONLY blocks via [[graft.Reuse.release]]); local/reliable
-    * checkpoint blocks have no eager teardown API at the DataFrame
-    * level — dropping the map's strong reference makes them
-    * ContextCleaner-reclaimable (weak-ref GC), which is the same
+    * registry-cold pass). Checkpoint blocks have no eager teardown API
+    * at the DataFrame level — dropping the map's strong reference makes
+    * them ContextCleaner-reclaimable (weak-ref GC), which is the same
     * lifecycle every superseded checkpoint in the engine has. */
   def clear(): Unit = {
-    cache.values.forEach(df =>
-      try graft.Reuse.release(df) catch { case _: Throwable => () })
     cache.clear()
     derivationPlans.clear()
   }

@@ -1116,15 +1116,11 @@ object Similarity {
       .materialized
     val nTotal = nodes.count()
     if (nTotal == 0) {
-      // release before the early return — the empty path must not leak
-      // a persisted frame in reuse.mode=persist
       val empty = nodes.select(
         col("id").as("query_id"), col("id").as("neighbor_id"),
         lit(0).as("rank"), lit(0.0).as("cos")).limit(0)
-      val out = df.sparkSession.createDataFrame(
+      return df.sparkSession.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), empty.schema)
-      nodes.released()
-      return out
     }
     // deterministic two-ring init: an LSH-localized ring (ring order =
     // (8-bit sign-LSH bucket, hashed within-bucket) — walks similarity
@@ -1216,14 +1212,11 @@ object Similarity {
       val folded = graph
         .select(col("query_id"), col("neighbor_id"), col("cos"))
         .unionByName(scorePairs(cands, nodes, bcastNodes))
-      val next = rankDistinct(folded).materialized
-      graph.released()
-      graph = next
+      graph = rankDistinct(folded).materialized
       val fp = fingerprint(graph)
       if (fp == prevFp) converged = true else prevFp = fp
       round += 1
     }
-    nodes.released()
     require(!requireConverged || converged || iterations == 0,
       s"knnGraph's emitted top-$k lists were still moving after " +
         s"$iterations rounds — raise `iterations` or `searchK` (the " +
@@ -1357,16 +1350,13 @@ object Similarity {
         .select("s.*").collect()(0)
       centers :+= ((pick.getLong(0), pick.getDouble(2)))
       if (r < k) {
-        val next = state
+        state = state
           .withColumn("best", greatest(col("best"),
             cosine(col("v"), vecLit(pick.getSeq[Double](1)))))
           .materialized
-        state.released()
-        state = next
       }
       r += 1
     }
-    state.released()
     centers.zipWithIndex
       .map { case ((id, sim), i) => (i + 1L, id, sim) }
       .toDF("rank", "center_id", "sim_at_selection")

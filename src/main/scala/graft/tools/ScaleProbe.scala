@@ -881,7 +881,6 @@ object ScaleProbe {
         g.join(g.groupBy("d").agg(min("doc_id").as("kid")), Seq("d"))
           .filter(col("doc_id") === col("kid")).count()
       }
-      corpus.released(); docs10.released()
       println(f"R10PROBE k=$k%d vecs=${2000 * k}%d docs=${5000 * k}%d " +
         f"binquant=$tb%.1fs($nb%d rows) kcenter=$tk%.1fs($nk%d) " +
         f"budgetfill=$tf2%.1fs($nf2%d kept) homoglyph=$th%.1fs($nh%d canon)")
@@ -912,7 +911,6 @@ object ScaleProbe {
           budgetPerSource = 100000L * k)
         .filter(col("keep")).count())
       val dom = docs11.filter(col("source") === "crawl_main").count()
-      docs11.released()
       println(f"R11PROBE k=$k%d docs=${5000 * k}%d dom=$dom%d " +
         f"budgetfill_dom=$tf%.1fs($nf%d kept)")
     }

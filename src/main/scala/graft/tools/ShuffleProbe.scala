@@ -26,14 +26,8 @@ object ShuffleProbe {
     val defaults = Seq("q_knn_graph", "q_knn_components", "q_ivf_topk_bigk",
       "q_simhash_neardup_wide", "q_boilerplate_lines", "q_curated_corpus_v5",
       "q_minhash_neardup", "q_sequence_packing")
-    val names = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(defaults)
-      .filter { n =>
-        val ok = graft.SparkEntry.queries.contains(n)
-        if (!ok) System.err.println(s"[shufprobe] unknown query $n — skipped")
-        ok
-      }
+    val selected = graft.SparkEntry.selectQueries(
+      sys.env.getOrElse("SPARK_GRAFT_ONLY", defaults.mkString(",")))
     val in = new AtomicLong
     val sw = new AtomicLong
     val sr = new AtomicLong
@@ -52,11 +46,11 @@ object ShuffleProbe {
     try graft.SparkEntry.queries("q1_lineitem_agg")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    names.foreach { name =>
+    selected.foreach { case (name, fn) =>
       in.set(0); sw.set(0); sr.set(0)
       val t0 = System.nanoTime()
       try {
-        graft.SparkEntry.queries(name)(spark, sfDir)
+        fn(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         // listener events are async — drain before reading the counters
         org.apache.spark.graftglue.ListenerBridge.drain(spark.sparkContext)

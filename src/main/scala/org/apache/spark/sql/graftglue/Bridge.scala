@@ -13,36 +13,4 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** A DataFrame whose LOGICAL plan is a leaf (`LogicalRDD`) over the
-    * frame's materialized rows — the lineage cut `localCheckpoint`
-    * performs, exposed for [[graft.Reuse]]'s persist mode (where the
-    * cache must keep serving reads but the logical plan must stop
-    * nesting). Two subtleties the first (bare `internalCreateDataFrame`)
-    * form got wrong, both ADVICE-r14 findings:
-    *
-    *  - a FRESH `QueryExecution` is built over the logical plan, so the
-    *    CacheManager lookup (`withCachedData`, a lazy val) is guaranteed
-    *    to apply even when the caller's Dataset instance was executed
-    *    BEFORE `persist()` ran — reusing that stale QueryExecution would
-    *    bypass the cache and silently recompute every read from source;
-    *  - the leaf is built with `LogicalRDD.fromDataset`, which forwards
-    *    the executed plan's `outputPartitioning` / `outputOrdering`
-    *    (rewritten onto the new output attributes) exactly like
-    *    `Dataset.checkpoint` does — so a `repartition(col).materialized`
-    *    frame KEEPS its co-partitioning metadata and per-round joins in
-    *    the iterative operators don't re-shuffle the edge-sized frame.
-    *
-    * `Dataset.ofRows` / `LogicalRDD.fromDataset` are `private[sql]`;
-    * this shim lives under `org.apache.spark.sql` solely to re-export
-    * them. */
-  def lineageCut(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val cs = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val fresh = org.apache.spark.sql.classic.Dataset.ofRows(
-      cs, df.queryExecution.logical)
-    org.apache.spark.sql.classic.Dataset.ofRows(cs,
-      org.apache.spark.sql.execution.LogicalRDD.fromDataset(
-        fresh.queryExecution.toRdd, fresh, isStreaming = false))
-  }
 }

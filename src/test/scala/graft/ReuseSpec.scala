@@ -1,15 +1,13 @@
 package graft
 
-
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.operators.PairGraph
 
 /** The mode-selectable materialization primitive (round-6 verdict #2):
-  * `local` (executor-pinned checkpoint), `reliable` (checkpoint dir,
-  * survives executor loss), `persist` (DISK_ONLY cache). In EVERY mode
-  * consumers must share one derivation, and results must be identical.
+  * `local` (executor-pinned checkpoint) or `reliable` (checkpoint dir,
+  * survives executor loss). In BOTH modes consumers must share one
+  * derivation, and results must be identical.
   */
 class ReuseSpec extends SparkSpec {
   import spark.implicits._
@@ -19,7 +17,7 @@ class ReuseSpec extends SparkSpec {
     try f finally spark.conf.unset(Reuse.ModeKey)
   }
 
-  for (m <- Seq("local", "reliable", "persist")) {
+  for (m <- Seq("local", "reliable")) {
     test(s"mode=$m: materialize is eager and consumers share one derivation") {
       withMode(m) {
         // an accumulator (NOT a captured AtomicInteger — task closures
@@ -44,100 +42,30 @@ class ReuseSpec extends SparkSpec {
     try withMode("reliable") {
       val mat = Reuse.materialize(spark.range(10).toDF("id"))
       assert(mat.count() === 10L)
+      assert(Reuse.materialize(spark.range(5).toDF("id")).count() === 5L)
       // RDD checkpoint files landed under the configured dir
       val walked = java.nio.file.Files.walk(dir)
       val n = try walked.count() finally walked.close()
       assert(n > 1, s"no checkpoint files under $dir")
+      // … and BOTH materializations share one <dir>/<uuid>: the
+      // configured (plain) path must be recognized in the qualified form
+      // SparkContext stores, not re-set per call
+      val listed = java.nio.file.Files.list(dir)
+      val subdirs = try listed.filter(java.nio.file.Files.isDirectory(_))
+        .count() finally listed.close()
+      assert(subdirs === 1L, s"checkpoint dir re-set per materialize under $dir")
     } finally spark.conf.unset(Reuse.DirKey)
   }
 
-  test("mode=persist caches DISK_ONLY, cuts logical lineage, release frees the cache") {
-    withMode("persist") {
-      val before = spark.sparkContext.getPersistentRDDs.size
-      val mat = Reuse.materialize(spark.range(10).toDF("id"))
-      // the cache is real and DISK_ONLY …
-      val added = spark.sparkContext.getPersistentRDDs.size - before
-      assert(added === 1)
-      assert(spark.sparkContext.getPersistentRDDs.values
-        .exists(_.getStorageLevel === StorageLevel.DISK_ONLY))
-      // … and the returned frame is a LEAF plan (LogicalRDD), so
-      // iterative loops stop nesting one AQE/InMemoryRelation layer
-      // per round (per-action plan stringification walked that nest
-      // exponentially — the r14 persist-mode stall)
-      assert(mat.queryExecution.analyzed
-        .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
-        mat.queryExecution.analyzed.nodeName)
-      assert(mat.count() === 10L)
-      // release unpersists the ORIGINAL cached frame through the
-      // wrapped handle
-      Reuse.release(mat)
-      assert(spark.sparkContext.getPersistentRDDs.size === before)
-    }
-  }
-
-  test("mode=persist keeps outputPartitioning: no re-shuffle of a " +
-      "repartition(col).materialized frame (ADVICE r14)") {
-    // the iterative operators repartition their edge frame on the join
-    // key ONCE and read it every round — the lineage-cut leaf must
-    // carry that HashPartitioning (checkpoint-style fromDataset), else
-    // every round's join re-shuffles the edge-sized frame
-    withMode("persist") {
-      val aqe = spark.conf.get("spark.sql.adaptive.enabled")
-      val bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val a = Reuse.materialize(
-          spark.range(1000).toDF("id").repartition(col("id")))
-        val b = spark.range(1000).toDF("id")
-        val j = a.join(b, "id")
-        val exchanges = j.queryExecution.executedPlan.collect {
-          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-        }
-        assert(exchanges.size === 1,
-          s"expected ONE exchange (the unpartitioned side only):\n" +
-            j.queryExecution.executedPlan)
-        assert(j.count() === 1000L)
-        Reuse.release(a)
-      } finally {
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
-      }
-    }
-  }
-
-  test("mode=persist serves reads from the cache even when the frame's " +
-      "QueryExecution was forced before materialize (ADVICE r14)") {
-    // reusing a pre-forced QueryExecution would bypass the CacheManager
-    // (withCachedData is lazy) and silently recompute from source on
-    // every read — proven here by deleting the source files and reading
-    withMode("persist") {
-      val dir = java.nio.file.Files.createTempDirectory("graft-reuse-preforce")
-      spark.range(50).toDF("id").write.mode("overwrite")
-        .parquet(dir.toString)
-      val df = spark.read.parquet(dir.toString)
-      // force THIS instance's QueryExecution before materialize
-      df.queryExecution.executedPlan
-      val mat = Reuse.materialize(df)
-      // source gone: only a cache-backed read can still answer
-      val walked = java.nio.file.Files.walk(dir)
-      try walked.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.delete(p); () })
-      finally walked.close()
-      assert(mat.agg(sum("id")).collect().head.getLong(0) === 1225L,
-        "materialized frame recomputed from (deleted) source — cache bypassed")
-      Reuse.release(mat)
-    }
-  }
-
   test("unknown mode fails loudly") {
-    withMode("cloud9") {
+    // `persist` was a mode once: a stale setting must not fall through
+    for (m <- Seq("cloud9", "persist")) withMode(m) {
       intercept[IllegalArgumentException](
         Reuse.materialize(spark.range(1).toDF("id")))
     }
   }
 
-  test("PairGraph + components pipeline agree across all three modes") {
+  test("PairGraph + components pipeline agree across both modes") {
     // representative consumer stack: jaccard pair graph -> components.
     // Same docs, one run per mode; results must be IDENTICAL (the mode
     // changes durability, never values).
@@ -158,6 +86,5 @@ class ReuseSpec extends SparkSpec {
     val local = run("local")
     assert(local._1.nonEmpty)
     assert(run("reliable") === local)
-    assert(run("persist") === local)
   }
 }
