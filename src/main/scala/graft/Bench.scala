@@ -89,9 +89,9 @@ object Bench {
     val floor = floorS()
     // registry-COLD pass (r16): PairGraph artifacts are write-once per
     // session, so with min-over-passes the derivation cost paid on
-    // pass 1 appears in NO query's reported minimum — a registry-served
-    // query's `queries` entry times a materialized-leaf read. This ONE
-    // extra pass clears the registry first (JIT/codegen stay warm, the
+    // pass 1 appears in NO query's reported minimum — the `queries`
+    // entry of a query that reads a shared artifact times a
+    // materialized-leaf read of it. This ONE extra pass clears the registry first (JIT/codegen stay warm, the
     // registry does not) and reports the honest fresh-derivation figure
     // per query as `queries_cold`. Within the pass, a shared artifact
     // is re-derived by whichever consumer runs first and read warm by

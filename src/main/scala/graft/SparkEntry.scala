@@ -178,25 +178,6 @@ object SparkEntry {
     unigramVocabTrained(s, dir).select("piece", "cnt").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
 
-  /** Write-once trained IVF coarse quantizer (the FAISS train-then-
-    * store shape): the mini-batch Lloyd rounds are driver-paced jobs
-    * keyed purely on (training corpus, k, iters, batchPerCell, seed),
-    * and the output is a MODEL-sized table — registry it like the
-    * tokenizer artifacts and serve every pass from the stored table.
-    * The (cell, v, n) frame round-trips the exact doubles; rows are
-    * re-sorted by cell on read to restore the trainer's array order. */
-  private def ivfCentroidsTrained(s: SparkSession, key: String,
-      train: => Array[(Int, Array[Double], Double)])
-      : Array[(Int, Array[Double], Double)] = {
-    import s.implicits._
-    PairGraph.of(s, key) {
-      train.toSeq.toDF("cell", "v", "n")
-    }.collect()
-      .map(r => (r.getInt(0),
-        r.getSeq[Double](1).toArray, r.getDouble(2)))
-      .sortBy(_._1)
-  }
-
   /** Write-once trained PQ codebooks (m=16 × ksub=32 over the
     * embeddings corpus) — q_pq_topk and q_ivfpq_topk train the
     * IDENTICAL model (same deterministic sample, same params); the
@@ -226,9 +207,9 @@ object SparkEntry {
   // every parameter that changes the result (iterations, damping, seed
   // rule). At 100 TB this is "extract the link graph and derive each
   // rank ONCE per corpus snapshot; every authority consumer reads the
-  // artifact" — locally it stops q_directed_pagerank /
-  // q_personalized_pagerank / q_hits_authority re-extracting the same
-  // host graph three times, and v8/v9 re-deriving ranks per pass.
+  // artifact" — locally five authority queries read one extracted
+  // host graph, and q_spam_mass reads the directed and trusted ranks
+  // q_directed_pagerank / q_personalized_pagerank derive.
 
   /** The directed host graph of the web-authority trio: pages
     * synthesized from `documents` under the modular link rule
@@ -1885,20 +1866,14 @@ object SparkEntry {
     // The excerpt's shingles are all in its source, so each planted
     // pair must surface at containment 1.0 despite Jaccard ≈ 0.2
     "q_containment_pairs" -> ((s, dir) => {
-      // directed-containment pair graph over the quote-augmented
-      // universe — registry-routed like its Jaccard-family cousins,
-      // keyed on ITS universe + params (not shareable with v4's
-      // containment, which runs a different universe)
-      PairGraph.of(s,
-          s"containment:aug37:n3:t0.9:cap$shingleDfCap:$dir") {
-        val base = Tables.documents(s, dir).select("doc_id", "text")
-        val quotes = base.filter(col("doc_id") % 37 === 0)
-          .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-            array_join(slice(TextAnalysis.tokens(col("text")), 6, 15), " ")
-              .as("text"))
-        Dedup.containmentPairs(base.unionAll(quotes), "doc_id", "text",
+      val base = Tables.documents(s, dir).select("doc_id", "text")
+      val quotes = base.filter(col("doc_id") % 37 === 0)
+        .select((col("doc_id") + lit(10000000L)).as("doc_id"),
+          array_join(slice(TextAnalysis.tokens(col("text")), 6, 15), " ")
+            .as("text"))
+      Dedup.containmentPairs(base.unionAll(quotes), "doc_id", "text",
           n = 3, threshold = 0.9, maxShingleDf = Some(shingleDfCap))
-      }.orderBy("id_a", "id_b")
+        .orderBy("id_a", "id_b")
     }),
     "q_minhash_neardup" -> ((s, dir) =>
       minhashPairs(s, dir).orderBy("id_a", "id_b")),
@@ -1925,19 +1900,9 @@ object SparkEntry {
     // error terms are exercised; every bucket collision replays
     // bit-for-bit in DuckDB because the signature hash is the portable
     // sha52, not xxhash64
-    // write-once registry artifact: a banding-parameter evaluation is
-    // by its own contract run ONCE per (corpus slice, config) before
-    // the tuned parameters commit — the report row is that artifact,
-    // keyed on the full parameter set so no other scheme's derivation
-    // is ever consulted (each report stays self-contained; the
-    // independence concern only forbids sharing truth ACROSS schemes).
-    // The banding machinery itself stays live-measured in the
-    // production-path neardup queries and pass 1 of every run
     "q_minhash_pr" -> ((s, dir) =>
-      PairGraph.of(s, s"bandingpr:minhash:n3:h16:b8:t0.6:sha:$dir") {
-        Dedup.minhashBandingReport(Tables.documents(s, dir), "doc_id",
-          "text", n = 3, numHashes = 16, bands = 8, threshold = 0.6)
-      }),
+      Dedup.minhashBandingReport(Tables.documents(s, dir), "doc_id",
+        "text", n = 3, numHashes = 16, bands = 8, threshold = 0.6)),
     // the Hamming-family twin: candidate P/R of a DELIBERATELY lossy
     // 4-band SimHash config at maxDist 5 — the regime
     // simhashNearDupPairs refuses loudly (pigeonhole needs 6 bands);
@@ -1945,29 +1910,20 @@ object SparkEntry {
     // choosing band count. Truth via the complete 6-band generator
     // Spark-side (a theorem, spec'd on planted band-defeating masks),
     // exhaustive packed-halves pairwise in the oracle
-    // same write-once evaluation-artifact treatment as q_minhash_pr,
-    // keyed on the Hamming config — derivation self-contained
     "q_simhash_pr" -> ((s, dir) =>
-      PairGraph.of(s, s"bandingpr:simhash:d5:b4:sha:$dir") {
-        Dedup.simhashBandingReport(Tables.documents(s, dir), "doc_id",
-          "text", maxDist = 5, evalBands = 4,
-          tokenHash = Dedup.PortableSha)
-      }),
+      Dedup.simhashBandingReport(Tables.documents(s, dir), "doc_id",
+        "text", maxDist = 5, evalBands = 4,
+        tokenHash = Dedup.PortableSha)),
     // AllPairs/PPJoin prefix filtering: exact full-universe Jaccard
     // with candidates only from each doc's rarest-token prefix — the
     // third candidate scheme next to the df-cap (changes the universe)
     // and minhash banding (probabilistic). Exact over the full
     // universe ⇒ it shares the exhaustive oracle with minhash (whose
     // banding is recall-1 at these params)
-    // the prefix-filtered pair graph is a near-dup PAIR GRAPH like
-    // minhashPairs/jaccardPairs — registry-routed under its own key
-    // since round 5's write-once methodology (derive once per corpus,
-    // consumers read); its candidate scheme stays independent
     "q_prefix_jaccard_pairs" -> ((s, dir) =>
-      PairGraph.of(s, s"prefixjaccard:n3:t0.6:$dir") {
-        Dedup.prefixJaccardPairs(Tables.documents(s, dir), "doc_id",
+      Dedup.prefixJaccardPairs(Tables.documents(s, dir), "doc_id",
           "text", n = 3, threshold = 0.6)
-      }.orderBy("id_a", "id_b")),
+        .orderBy("id_a", "id_b")),
     // cross-source duplication matrix — "how much does source X
     // duplicate source Y": every surviving near-dup edge attributed to
     // its unordered source pair. Corpus governance from the CACHED pair
@@ -2020,30 +1976,18 @@ object SparkEntry {
       val docs = Tables.documents(s, dir)
       val old = docs.filter(col("doc_id") % 5 =!= 0)
       val fresh = docs.filter(col("doc_id") % 5 === 0)
-      // The merge theorem forbids sharing the df-CAPPED family graph
-      // (a per-corpus cap would differ between increments and the
-      // from-scratch recompute) — but the three UNCAPPED sub-corpus
-      // graphs are themselves corpus-keyed artifacts: memoize each
-      // under its own (uncapped, filter, params) key so repeated runs
-      // (and any future consumer of the same increment split) pay the
-      // derivation once per session.
-      val oldWithin = PairGraph.of(s, s"jaccard:n3:t0.6:uncapped:mod5ne0:$dir") {
-        Dedup.jaccardNearDupPairs(old, "doc_id", "text", n = 3,
-          threshold = 0.6)
-      }
-      // standing labels are the dedup registry's STORED artifact (the
-      // mergeComponents premise) — derived once per session/corpus
-      val baseLabels = PairGraph.of(s, s"components:minlabel:uncapped:mod5ne0:$dir")(
-        Dedup.nearDupComponents(old, "doc_id", oldWithin))
-      val withinNew = PairGraph.of(s, s"jaccard:n3:t0.6:uncapped:mod5eq0:$dir") {
-        Dedup.jaccardNearDupPairs(fresh, "doc_id", "text",
-          n = 3, threshold = 0.6)
-      }.select("id_a", "id_b")
-      val across = PairGraph.of(s, s"jaccardacross:n3:t0.6:uncapped:mod5:$dir") {
-        Dedup.jaccardNearDupPairsAcross(
+      val oldWithin = Dedup.jaccardNearDupPairs(old, "doc_id", "text",
+        n = 3, threshold = 0.6).materialized
+      // standing labels: the stored labeling mergeComponents folds into
+      val baseLabels =
+        Dedup.nearDupComponents(old, "doc_id", oldWithin).materialized
+      val withinNew = Dedup.jaccardNearDupPairs(fresh, "doc_id", "text",
+          n = 3, threshold = 0.6).materialized
+        .select("id_a", "id_b")
+      val across = Dedup.jaccardNearDupPairsAcross(
           fresh, "doc_id", "text", old, "doc_id", "text",
-          n = 3, threshold = 0.6)
-      }.select(col("id_left").as("id_a"), col("id_right").as("id_b"))
+          n = 3, threshold = 0.6).materialized
+        .select(col("id_left").as("id_a"), col("id_right").as("id_b"))
       Dedup.mergeComponents(baseLabels, fresh, "doc_id",
           withinNew.unionByName(across))
         .orderBy("doc_id")
@@ -2066,41 +2010,31 @@ object SparkEntry {
       val dirty = Tables.documents(s, dir).select(col("doc_id"),
         concat(col("text"), lit(" zero\u200Bwidth bidi\u202Eevil\u202C" +
           " soft\u00ADhyphen cafe\u0301\u0001  end ")).as("raw"))
-      // the gated-survivor frame (clean → floor → classifier gate) is
-      // the keep-list artifact every downstream consumer reads —
-      // write-once registry like v9's curated keep-list; the
-      // incremental merge fold below stays live per pass (it is what
-      // this query adjudicates)
-      val surv = PairGraph.of(s, s"curated:cleaned-surv:$dir") {
-        val cleaned = dirty
-          .select(col("doc_id"),
-            TextAnalysis.cleanTextV2(col("raw")).as("text"))
-          .filter(size(split(trim(col("text")), "\\s+")) >= 20)
-          .materialized // feeds the classifier chain AND the gate join
-        val pos = TextAnalysis.classifierApplyTable(cleaned, "doc_id",
-            "text", TextAnalysis.classifierFixtureWeights(s, 512),
-            buckets = 512)
-          .filter(col("label")).select("doc_id")
-        cleaned.join(pos, Seq("doc_id"), "left_semi")
-      }
+      // the gated-survivor frame (clean → floor → classifier gate)
+      // feeds every pair derivation below and the final join
+      val cleaned = dirty
+        .select(col("doc_id"),
+          TextAnalysis.cleanTextV2(col("raw")).as("text"))
+        .filter(size(split(trim(col("text")), "\\s+")) >= 20)
+        .materialized // feeds the classifier chain AND the gate join
+      val pos = TextAnalysis.classifierApplyTable(cleaned, "doc_id",
+          "text", TextAnalysis.classifierFixtureWeights(s, 512),
+          buckets = 512)
+        .filter(col("label")).select("doc_id")
+      val surv = cleaned.join(pos, Seq("doc_id"), "left_semi").materialized
       val old = surv.filter(col("doc_id") % 5 =!= 0)
       val fresh = surv.filter(col("doc_id") % 5 === 0)
-      val oldWithin = PairGraph.of(s, s"jaccard:cur:n3:t0.6:old:$dir") {
-        Dedup.jaccardNearDupPairs(old, "doc_id", "text", n = 3,
-          threshold = 0.6)
-      }
-      // standing labels are the dedup registry's STORED artifact (the
-      // mergeComponents premise) — derived once per session/corpus
-      val baseLabels = PairGraph.of(s, s"components:minlabel:cur:old:$dir")(
-        Dedup.nearDupComponents(old, "doc_id", oldWithin))
-      val withinNew = PairGraph.of(s, s"jaccard:cur:n3:t0.6:new:$dir") {
-        Dedup.jaccardNearDupPairs(fresh, "doc_id", "text", n = 3,
-          threshold = 0.6)
-      }.select("id_a", "id_b")
-      val across = PairGraph.of(s, s"jaccard:cur:n3:t0.6:across:$dir") {
-        Dedup.jaccardNearDupPairsAcross(fresh, "doc_id", "text",
-          old, "doc_id", "text", n = 3, threshold = 0.6)
-      }.select(col("id_left").as("id_a"), col("id_right").as("id_b"))
+      val oldWithin = Dedup.jaccardNearDupPairs(old, "doc_id", "text",
+        n = 3, threshold = 0.6).materialized
+      // standing labels: the stored labeling mergeComponents folds into
+      val baseLabels =
+        Dedup.nearDupComponents(old, "doc_id", oldWithin).materialized
+      val withinNew = Dedup.jaccardNearDupPairs(fresh, "doc_id", "text",
+          n = 3, threshold = 0.6).materialized
+        .select("id_a", "id_b")
+      val across = Dedup.jaccardNearDupPairsAcross(fresh, "doc_id", "text",
+          old, "doc_id", "text", n = 3, threshold = 0.6).materialized
+        .select(col("id_left").as("id_a"), col("id_right").as("id_b"))
       Dedup.mergeComponents(baseLabels, fresh, "doc_id",
           withinNew.unionByName(across))
         .join(surv, Seq("doc_id"))
@@ -2134,27 +2068,20 @@ object SparkEntry {
           .select(regexp_extract(col("url"), "([0-9]+)$", 1).cast("long")
             .as("doc_id"), col("text"), col("warc_date"))
           .filter(size(split(trim(col("text")), "\\s+")) >= 20)
-      // per-night curated doc frames are the nightly-ingest artifacts
-      // (decode + keep-latest + floor) — write-once per night; the
-      // merge fold below stays live per pass
-      val old = PairGraph.of(s, s"warcinc:docs:night1:$dir")(docsOf(recs1))
-      val fresh = PairGraph.of(s, s"warcinc:docs:night2:$dir")(docsOf(recs2))
-      val oldWithin = PairGraph.of(s, s"jaccard:warcinc:n3:t0.6:old:$dir") {
-        Dedup.jaccardNearDupPairs(old, "doc_id", "text", n = 3,
-          threshold = 0.6)
-      }
-      // standing labels are the dedup registry's STORED artifact (the
-      // mergeComponents premise) — derived once per session/corpus
-      val baseLabels = PairGraph.of(s, s"components:minlabel:warcinc:old:$dir")(
-        Dedup.nearDupComponents(old, "doc_id", oldWithin))
-      val withinNew = PairGraph.of(s, s"jaccard:warcinc:n3:t0.6:new:$dir") {
-        Dedup.jaccardNearDupPairs(fresh, "doc_id", "text", n = 3,
-          threshold = 0.6)
-      }.select("id_a", "id_b")
-      val across = PairGraph.of(s, s"jaccard:warcinc:n3:t0.6:across:$dir") {
-        Dedup.jaccardNearDupPairsAcross(fresh, "doc_id", "text",
-          old, "doc_id", "text", n = 3, threshold = 0.6)
-      }.select(col("id_left").as("id_a"), col("id_right").as("id_b"))
+      // per-night curated doc frames (decode + keep-latest + floor)
+      val old = docsOf(recs1).materialized
+      val fresh = docsOf(recs2).materialized
+      val oldWithin = Dedup.jaccardNearDupPairs(old, "doc_id", "text",
+        n = 3, threshold = 0.6).materialized
+      // standing labels: the stored labeling mergeComponents folds into
+      val baseLabels =
+        Dedup.nearDupComponents(old, "doc_id", oldWithin).materialized
+      val withinNew = Dedup.jaccardNearDupPairs(fresh, "doc_id", "text",
+          n = 3, threshold = 0.6).materialized
+        .select("id_a", "id_b")
+      val across = Dedup.jaccardNearDupPairsAcross(fresh, "doc_id", "text",
+          old, "doc_id", "text", n = 3, threshold = 0.6).materialized
+        .select(col("id_left").as("id_a"), col("id_right").as("id_b"))
       val all = old.unionByName(fresh)
       Dedup.mergeComponents(baseLabels, fresh, "doc_id",
           withinNew.unionByName(across))
@@ -2377,17 +2304,11 @@ object SparkEntry {
     // disk at sf0.1). DedupSpec additionally pins ≡-exhaustive at
     // maxDist 7 on full sf0.001 and planted 4-band-defeating masks.
     // maxDist up to 31 is available on the operator itself.
-    // registry-routed like minhashPairs (the same near-dup pair-graph
-    // artifact, wide-Hamming config) — the documented mod-4-sample
-    // candidate volume is paid once per (session, corpus) instead of
-    // per evaluation; the narrow config (q_simhash_neardup, baseline37)
-    // stays live-measured
     "q_simhash_neardup_wide" -> ((s, dir) =>
-      PairGraph.of(s, s"simhash:d5:sha:$dir") {
-        Dedup.simhashNearDupPairs(
+      Dedup.simhashNearDupPairs(
           Tables.documents(s, dir),
           "doc_id", "text", maxDist = 5, tokenHash = Dedup.PortableSha)
-      }.orderBy("id_a", "id_b")),
+        .orderBy("id_a", "id_b")),
     // ----- tiered dedup cascade: the production cost ordering — exact
     // (one digest scan) kills identical copies first, SimHash (one
     // codegen signature pass + band join) kills the near-identical on
@@ -2457,15 +2378,12 @@ object SparkEntry {
         .select((col("c_custkey") + lit(10000000L)).as("c_custkey"),
           concat(col("c_name"), lit(" jr")).as("c_name"),
           col("c_acctbal"))
-      // ER pair graph — write-once registry artifact like the Jaccard
-      // family's pair graphs, keyed on its own planted universe
-      PairGraph.of(s, s"linkage:snm:custmod2:jr41:w10:t0.9:$dir") {
-        RecordLinkage.sortedNeighborhood(c.unionAll(dups), "c_custkey",
+      RecordLinkage.sortedNeighborhood(c.unionAll(dups), "c_custkey",
           "c_name",
           Seq(RecordLinkage.FieldSim("c_name", 0.6),
             RecordLinkage.FieldSim("c_acctbal", 0.4, exact = true)),
           threshold = 0.9, window = 10)
-      }.orderBy("id_a", "id_b")
+        .orderBy("id_a", "id_b")
     }),
     "q_record_linkage" -> ((s, dir) => {
       val c = Tables.customer(s, dir)
@@ -2478,16 +2396,12 @@ object SparkEntry {
         .select((col("c_custkey") + lit(10000000L)).as("c_custkey"),
           substring(col("c_name"), 2, 40).as("c_name"),
           col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
-      // ER pair graph — registry artifact, own universe key (substring
-      // variants; NOT shareable with golden_records' appended-variant
-      // universe, which keys separately)
-      PairGraph.of(s, s"linkage:dedupe:custmod2:sub41:t0.9:$dir") {
-        RecordLinkage.dedupePairs(c.unionAll(dups), "c_custkey",
+      RecordLinkage.dedupePairs(c.unionAll(dups), "c_custkey",
           Seq("c_nationkey", "c_mktsegment"),
           Seq(RecordLinkage.FieldSim("c_name", 0.6),
             RecordLinkage.FieldSim("c_acctbal", 0.4, exact = true)),
           threshold = 0.9)
-      }.orderBy("id_a", "id_b")
+        .orderBy("id_a", "id_b")
     }),
     // golden-record consolidation — the ER end product: linkage pairs →
     // connected components → ONE survivor per entity by a survivorship
@@ -2506,17 +2420,12 @@ object SparkEntry {
             .otherwise(substring(col("c_name"), 2, 40)).as("c_name"),
           col("c_nationkey"), col("c_acctbal"), col("c_mktsegment"))
       val aug = base.unionAll(dups)
-      // the blocked-Levenshtein pair derivation is the registry
-      // artifact (own appended-variant universe); survivorship stays
-      // live per pass — it is what this query adjudicates
-      val pairs = PairGraph.of(s,
-          s"linkage:dedupe:custmod2:var41x164:t0.9:$dir") {
-        RecordLinkage.dedupePairs(aug, "c_custkey",
+      val pairs = RecordLinkage.dedupePairs(aug, "c_custkey",
           Seq("c_nationkey", "c_mktsegment"),
           Seq(RecordLinkage.FieldSim("c_name", 0.6),
             RecordLinkage.FieldSim("c_acctbal", 0.4, exact = true)),
           threshold = 0.9)
-      }
+        .materialized
       Dedup.keepBestPerComponent(aug, "c_custkey", pairs,
           length(col("c_name")))
         .select("c_custkey", "c_name", "c_acctbal")
@@ -2538,10 +2447,7 @@ object SparkEntry {
     // perturbs only sub-boundary orderings), so descent has gradient
     // at every range and the EXHAUSTIVE all-pairs oracle over the same
     // planted vectors adjudicates recall-1 convergence exactly (the
-    // ANN family convention). The descent output is a write-once
-    // PairGraph artifact (distinct key from q_knn_components' — the
-    // two plants differ: frac(id·φ) circle vs %16 anchors — so each
-    // graph derives once per session, not once per consumer run)
+    // ANN family convention)
     "q_knn_graph" -> ((s, dir) => {
       val theta = (col("vec_id") * lit(0.618033988749895)) % 1.0 *
         lit(6.283185307179586)
@@ -2550,10 +2456,9 @@ object SparkEntry {
         transform(col("embedding"), x => x.cast("double") * 0.001))
       val emb2 = Tables.embeddings(s, dir)
         .select(col("vec_id"), planted.as("pv"))
-      PairGraph.of(s, s"knngraph:circle:k5:i4:s12:$dir") {
-        Similarity.knnGraph(emb2, "vec_id", "pv", k = 5, iterations = 4,
+      Similarity.knnGraph(emb2, "vec_id", "pv", k = 5, iterations = 4,
           searchK = 12, requireConverged = true)
-      }.orderBy("query_id", "rank")
+        .orderBy("query_id", "rank")
     }),
     // the k-NN graph CONSUMED: mutual-kNN edges → connected components
     // = graph-based semantic clustering (the SemDeDup-at-scale shape
@@ -2576,10 +2481,10 @@ object SparkEntry {
         transform(col("embedding"), x => x.cast("double") * 0.001))
       val emb2 = Tables.embeddings(s, dir)
         .select(col("vec_id"), planted.as("pv"))
-      val e = PairGraph.of(s, s"knngraph:anchor16:k5:i4:s20:$dir") {
-        Similarity.knnGraph(emb2, "vec_id", "pv", k = 5,
+      val e = Similarity.knnGraph(emb2, "vec_id", "pv", k = 5,
           iterations = 4, searchK = 20, requireConverged = true)
-      }.select("query_id", "neighbor_id")
+        .materialized
+        .select("query_id", "neighbor_id")
       val mutual = e.join(
           e.select(col("query_id").as("neighbor_id"),
             col("neighbor_id").as("query_id")),
@@ -2651,11 +2556,8 @@ object SparkEntry {
     // dup-clustered corpora probe far fewer of their cells)
     "q_ivf_topk_bigk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      // coarse quantizer served from the write-once index-artifact
-      // registry (train once per corpus snapshot — ivfCentroidsTrained)
-      val cents = ivfCentroidsTrained(s, s"ivfcents:k256:i4:b8:s42:$dir",
-        Similarity.trainCentroidsMiniBatch(emb, "vec_id", "embedding",
-          k = 256))
+      val cents = Similarity.trainCentroidsMiniBatch(emb, "vec_id",
+        "embedding", k = 256)
       Similarity.ivfTopKServe(emb, emb.filter(col("vec_id") < 10),
           "vec_id", "embedding", k = 5, nProbe = 224, cents = cents)
         .orderBy("query_id", "rank")
@@ -2672,14 +2574,10 @@ object SparkEntry {
     // shares the exhaustive full-corpus oracle
     "q_ivf_extend_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      // the frozen half-corpus-trained quantizer is exactly the stored
-      // index artifact the add-after-train story ships — registry key
-      // distinct from q_ivf_topk_bigk's (different training snapshot)
-      val cents = ivfCentroidsTrained(s,
-        s"ivfcents:k256:i4:b8:s42:mod2eq0:$dir",
-        Similarity.trainCentroidsMiniBatch(
-          emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
-          k = 256))
+      // the frozen half-corpus-trained quantizer
+      val cents = Similarity.trainCentroidsMiniBatch(
+        emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
+        k = 256)
       require(cents.nonEmpty,
         "trainCorpus has no non-zero vectors — cannot build an IVF index " +
           "(check the snapshot predicate)")
@@ -2794,16 +2692,12 @@ object SparkEntry {
     // its recall-1 tuning carries over to the straddling pairs.
     "q_embedding_across" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      // cross-corpus LSH pair graph — same write-once artifact class as
-      // the cached self-join embedding pair graph (embeddingPairs),
-      // keyed on the across-universe + LSH params
-      PairGraph.of(s, s"emblsh:across:mod5:t0.4:b3x12:$dir") {
-        Similarity.lshNearDupPairsAcross(
+      Similarity.lshNearDupPairsAcross(
           emb.filter(col("vec_id") % 5 =!= 0),
           emb.filter(col("vec_id") % 5 === 0),
           "vec_id", "embedding", threshold = 0.4,
           bitsPerTable = 3, numTables = 12, multiProbe = true, dim = 64)
-      }.orderBy("id_ref", "id_new")
+        .orderBy("id_ref", "id_new")
     }),
     // winsorization: clip values at their group's p95 — outlier damping
     // before averaging. exact = the oracle-checkable form; the approx
@@ -3043,17 +2937,10 @@ object SparkEntry {
     // corpus' top-1000 bigram vocabulary (count-exact cut; the log-sum
     // of a real perplexity is library-dependent, the OOV fraction
     // isn't)
-    "q_oov_rate" -> ((s, dir) => {
-      // train/apply split: the top-1000 bigram vocabulary is a shipped
-      // model artifact (the unigram/classifier apply-table precedent) —
-      // write-once registry; per pass only the apply scan runs
-      val vocab = PairGraph.of(s, s"oovvocab:bg:k1000:$dir") {
-        TextAnalysis.oovVocab(Tables.documents(s, dir), "text", 1000)
-      }
+    "q_oov_rate" -> ((s, dir) =>
       TextAnalysis.oovRate(Tables.documents(s, dir), "doc_id", "text",
-          vocab)
-        .orderBy("doc_id")
-    }),
+          vocabK = 1000)
+        .orderBy("doc_id")),
     // corpus-as-LM unigram cross-entropy — the CCNet/pile-style LM
     // quality feature; token-keyed score join (NOT broadcast: a 100 TB
     // vocabulary can exceed broadcast limits; AQE broadcasts when small)
@@ -3064,35 +2951,17 @@ object SparkEntry {
     // interpolated bigram LM (KenLM-shaped, CCNet-style quality
     // score) — model tables are ngram-keyed shuffle joins, never
     // broadcast-assumed
-    "q_bigram_logprob" -> ((s, dir) => {
-      // train/apply split: the interpolated LM's bits table is the
-      // shipped .arpa-analog artifact (trained once per corpus
-      // snapshot) — write-once registry; per pass only the per-doc
-      // apply scan + one bigram-keyed join run
-      val bits = PairGraph.of(s, s"lmbits:bigram:l0.7:$dir") {
-        TextAnalysis.bigramBitsTable(Tables.documents(s, dir), "text",
-          lambda = 0.7)
-      }
+    "q_bigram_logprob" -> ((s, dir) =>
       TextAnalysis.bigramCrossEntropy(Tables.documents(s, dir),
-          "doc_id", "text", bits)
-        .orderBy("doc_id")
-    }),
+          "doc_id", "text", lambda = 0.7)
+        .orderBy("doc_id")),
     // DSIR importance weights against the English slice as the target
     // distribution — hashed-ngram models are ≤4096 rows by
     // construction, so the score join broadcasts at any corpus size
-    "q_dsir_weights" -> ((s, dir) => {
-      // train/apply split: the fitted importance estimator (≤4096-row
-      // bucket table) is the DSIR paper's train-once artifact —
-      // write-once registry; per pass only the featurize scan + the
-      // bounded broadcast join run
-      val model = PairGraph.of(s, s"dsirmodel:en:b4096:$dir") {
-        TextAnalysis.dsirModelTable(Tables.documents(s, dir), "text",
-          col("lang") === "en", buckets = 4096)
-      }
+    "q_dsir_weights" -> ((s, dir) =>
       TextAnalysis.dsirLogWeights(Tables.documents(s, dir),
-          "doc_id", "text", model, buckets = 4096)
-        .orderBy("doc_id")
-    }),
+          "doc_id", "text", col("lang") === "en", buckets = 4096)
+        .orderBy("doc_id")),
     // fastText-architecture quality classifier (hashed uni+bigram
     // linear model) with the deterministic integer weight fixture —
     // BIGINT scoring end-to-end, so the oracle is hash-exact with no
@@ -3240,16 +3109,12 @@ object SparkEntry {
       val toks = Tables.documents(s, dir)
         .filter(length(trim(col("text"))) > 0)
         .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
-      // sketch TABLE registry-routed (build-once artifact, the
-      // q_countmin_joinsize rationale); the exact certification side
-      // stays live and ALSO serves as the probe universe — its keys ARE
-      // the distinct tokens pointEstimates dedups to, so the token
-      // stream is scanned once per pass instead of three times
-      // (build + exact + probes). The tiny exact rollup (vocab-sized)
-      // is materialized so probes and the final join read one leaf
-      val cm = PairGraph.of(s, s"countmin:doctokens:d4:w64:$dir") {
-        CountMin.table(toks, "tok", d = 4, w = 64)
-      }
+      // the exact certification side ALSO serves as the probe
+      // universe — its keys ARE the distinct tokens pointEstimates
+      // dedups to, so the probes need no third token scan. The tiny
+      // exact rollup (vocab-sized) is materialized so probes and the
+      // final join read one leaf
+      val cm = CountMin.table(toks, "tok", d = 4, w = 64).materialized
       val exact = toks.groupBy("tok").agg(count(lit(1)).as("exact_count"))
         .materialized
       CountMin.pointEstimates(exact, cm, "tok", d = 4, w = 64)
@@ -3264,16 +3129,10 @@ object SparkEntry {
     // one-sided bound
     "q_countmin_joinsize" -> ((s, dir) => {
       val li = Tables.lineitem(s, dir).select(col("l_partkey"))
-      // the sketch TABLE is the canonical build-once artifact (the
-      // whole point of a sketch: one pass builds it, every estimator
-      // reads it) — registry-routed; ALSO fixes a measured plan defect:
-      // the un-materialized build subtree appeared on BOTH sides of the
-      // inner-product self-join (no ReusedExchange), so the 4-hash sha
-      // pass over lineitem ran twice per evaluation. The exact Sigma c^2
-      // certification side stays live per pass
-      val cm = PairGraph.of(s, s"countmin:lineitem-partkey:d4:w256:$dir") {
-        CountMin.table(li, "l_partkey", d = 4, w = 256)
-      }
+      // materialized: un-materialized, the build subtree appeared on
+      // BOTH sides of the inner-product self-join (no ReusedExchange),
+      // so the 4-hash sha pass over lineitem ran twice per evaluation
+      val cm = CountMin.table(li, "l_partkey", d = 4, w = 256).materialized
       val exact = li.groupBy("l_partkey").agg(count(lit(1)).as("c"))
         .agg(sum(col("c") * col("c")).as("exact_join_size"))
       CountMin.innerProductEstimate(cm, cm).crossJoin(exact)
@@ -3310,17 +3169,13 @@ object SparkEntry {
           explode(TextAnalysis.wordNgrams(col("text"), 3)).as("sh"))
       def half(pred: org.apache.spark.sql.Column) =
         sh.filter(pred).select(lit("all").as("g"), col("sh"))
-      // the per-half register tables are the sketch ARTIFACTS the merge
-      // story is about ("merged without re-reading either corpus") —
-      // registry-routed like the count-min tables, so per pass the
-      // corpus is scanned once (the live exact-union certification)
-      // instead of three times
-      val ra = PairGraph.of(s, s"hll:p6:sh3:even:$dir") {
-        Hll.registers(half(col("doc_id") % 2 === 0), "g", "sh", p = 6)
-      }
-      val rb = PairGraph.of(s, s"hll:p6:sh3:odd:$dir") {
-        Hll.registers(half(col("doc_id") % 2 =!= 0), "g", "sh", p = 6)
-      }
+      // the per-half register tables are materialized: each is read by
+      // its own scalarize AND the merge ("merged without re-reading
+      // either corpus")
+      val ra = Hll.registers(half(col("doc_id") % 2 === 0), "g", "sh",
+        p = 6).materialized
+      val rb = Hll.registers(half(col("doc_id") % 2 =!= 0), "g", "sh",
+        p = 6).materialized
       def sc(regs: DataFrame, suffix: String) =
         Hll.scalarize(regs, "g", p = 6).select(
           col("n_zero").as(s"n_zero_$suffix"),
@@ -3545,11 +3400,6 @@ object SparkEntry {
     // counts) each run once; weights are registry-sized and reused
     // across the three plan stages via one materialization
     "q_recommended_mixture" -> ((s, dir) => {
-      // the recommended-mixture row set is a loader PLANNING artifact
-      // (the FFD packing-plan precedent): computed once per corpus
-      // snapshot, executed by many loader runs — write-once registry
-      // keyed on the allocation parameters
-      PairGraph.of(s, s"mixtureplan:recommended:a3q:b1M:$dir") {
       val docs = Tables.documents(s, dir)
         .filter(col("text").isNotNull && length(trim(col("text"))) > 0)
       val clf = TextAnalysis.classifierApplyTable(docs, "doc_id", "text",
@@ -3587,7 +3437,7 @@ object SparkEntry {
           col("epochs_micro"),
           coalesce(col("fill_docs"), lit(0L)).as("fill_docs"),
           coalesce(col("fill_tokens"), lit(0L)).as("fill_tokens"))
-      }.orderBy("source")
+        .orderBy("source")
     }),
     // corpus-version vocabulary drift: PSI over hashed-token buckets
     // between the even- and odd-id halves (two releases of one corpus)
@@ -3941,17 +3791,11 @@ object SparkEntry {
         .select(cu("old").as("src"), cu("p").as("dst"))
         .unionByName(docs.filter(col("doc_id") % 10 === 0)
           .select(cu("older").as("src"), cu("old").as("dst")))
-      // the resolved-redirect map is the canonicalization artifact
-      // (v9's treatment): pointer doubling's materialize rounds run
-      // once per (session, corpus); the rewrite + keep-latest this
-      // query adjudicates stay live per pass. q_redirect_chains keeps
-      // the doubling machinery itself live-measured
-      val rd = PairGraph.of(s, s"redirects:resolved:h16:rdfixture:$dir") {
-        graft.operators.Crawl.resolveRedirects(edges, "src", "dst",
-            maxHops = 16)
-          .filter(col("resolved"))
-          .select(col("url").as("__ru"), col("final_url"))
-      }
+      val rd = graft.operators.Crawl.resolveRedirects(edges, "src", "dst",
+          maxHops = 16)
+        .filter(col("resolved"))
+        .select(col("url").as("__ru"), col("final_url"))
+        .materialized
       // NOT broadcast: a web-scale redirect map is url-count-sized
       // (10⁸ rows at 100 TB) — a plain equi-join on the url key, AQE
       // picks the strategy at actual sizes
@@ -4306,11 +4150,8 @@ object SparkEntry {
         .select(least(col("h1"), col("h2")).as("ha"),
           greatest(col("h1"), col("h2")).as("hb"))
         .distinct
-      PairGraph.of(s,
-          s"rank:undirected:i10:d0.85:outlinkedges-modall:$dir") {
-          Analytics.pageRank(edges, "ha", "hb", iterations = 10,
-            damping = 0.85)
-        }
+      Analytics.pageRank(edges, "ha", "hb", iterations = 10,
+          damping = 0.85)
         .select(col("node"), col("rank").as("pagerank"))
         .orderBy("node")
     }),
@@ -4334,17 +4175,14 @@ object SparkEntry {
     // split ∝ w/Σw instead of uniformly. Same sink structure, so the
     // dangling term stays load-bearing; the oracle unrolls the
     // weighted recurrence (pageRankWeightedOracleCtes)
-    "q_weighted_pagerank" -> ((s, dir) => {
-      PairGraph.of(s, s"rank:weighted:i10:d0.85:hostedges-mod3out:$dir") {
-          Analytics.pageRankDirectedWeighted(
-            directedHostEdges(s, dir)
-              .groupBy("src_host", "dst_host")
-              .agg(count(lit(1)).cast("double").as("w")),
-            "src_host", "dst_host", "w", iterations = 10, damping = 0.85)
-        }
+    "q_weighted_pagerank" -> ((s, dir) =>
+      Analytics.pageRankDirectedWeighted(
+          directedHostEdges(s, dir)
+            .groupBy("src_host", "dst_host")
+            .agg(count(lit(1)).cast("double").as("w")),
+          "src_host", "dst_host", "w", iterations = 10, damping = 0.85)
         .select(col("node"), col("rank").as("pagerank"))
-        .orderBy("node")
-    }),
+        .orderBy("node")),
     // PERSONALIZED PageRank over the same directed host graph —
     // restarts land only on the trusted-seed hosts (suffix % 4 == 1),
     // so rank reads "authority as seen from my seed list" (the
@@ -4381,13 +4219,10 @@ object SparkEntry {
     // candidates, %3==0 hosts (link targets that never publish) must
     // surface with hub EXACTLY 0, and sources nobody links with
     // authority 0. Oracle unrolls the L2-normalized double recursion
-    "q_hits_authority" -> ((s, dir) => {
-      PairGraph.of(s, s"rank:hits:i8:hostedges-mod3out:$dir") {
-          Analytics.hits(directedHostEdges(s, dir),
-            "src_host", "dst_host", iterations = 8)
-        }
-        .orderBy("node")
-    }),
+    "q_hits_authority" -> ((s, dir) =>
+      Analytics.hits(directedHostEdges(s, dir),
+          "src_host", "dst_host", iterations = 8)
+        .orderBy("node")),
     // INCREMENTAL host-graph PageRank — the nightly-increment analog
     // of q_warc_incremental_curation for rank: the standing edge set
     // (night 1 = even doc_ids' pages, extracted and materialized once)
@@ -4424,26 +4259,16 @@ object SparkEntry {
             UrlOps.hostNoPort(col("outlink")).as("hb"))
           .filter(col("ha") =!= col("hb"))
       }
-      // write-once RANK registry entry (the r14 verdict names this
-      // query a registry cousin of q_outlink_pagerank): the standing
-      // edge frame, the increment merge and the 10-round recurrence
-      // are all functions of (corpus, link rule, mod-2 split, i10,
-      // d0.85) — derived once per session/corpus, every pass reads
-      // the materialized rank frame (the directed/ppr/hits
-      // methodology; fresh-derivation cost stays on pass 1 and in
-      // RANKPROBE's growth evidence)
-      PairGraph.of(s,
-          s"rank:incremental:mod2:i10:d0.85:outlinks-mod1x7:$dir") {
-        val standing = edges(pages.filter(col("doc_id") % 2 === 0))
-          .select(least(col("ha"), col("hb")).as("ha"),
-            greatest(col("ha"), col("hb")).as("hb"))
-          .distinct.materialized
-        val merged = graft.operators.Crawl.mergeHostEdges(standing,
-          edges(pages.filter(col("doc_id") % 2 === 1)))
-        Analytics.pageRank(merged, "ha", "hb", iterations = 10,
-            damping = 0.85)
-          .select(col("node"), col("rank").as("pagerank"))
-      }.orderBy("node")
+      val standing = edges(pages.filter(col("doc_id") % 2 === 0))
+        .select(least(col("ha"), col("hb")).as("ha"),
+          greatest(col("ha"), col("hb")).as("hb"))
+        .distinct.materialized
+      val merged = graft.operators.Crawl.mergeHostEdges(standing,
+        edges(pages.filter(col("doc_id") % 2 === 1)))
+      Analytics.pageRank(merged, "ha", "hb", iterations = 10,
+          damping = 0.85)
+        .select(col("node"), col("rank").as("pagerank"))
+        .orderBy("node")
     }),
     // the FULL "crawl bytes → authority-weighted training mixture"
     // story as ONE adjudicated query: anchors extracted from
@@ -4481,14 +4306,12 @@ object SparkEntry {
         concat(lit("https://"), col("source"), lit(".example.com/p"),
           col("doc_id").cast("string")).as("url"),
         html.as("html"))
-      // one extraction feeds authority AND the graph — registry-shared
-      // so bench/verify passes after the first read the artifact
-      val anchors = PairGraph.of(s, s"anchoredges:modall:$dir") {
-        UrlOps.extractAnchors(pages, "url", "html")
-          .select(UrlOps.hostNoPort(col("url")).as("src_host"),
-            UrlOps.hostNoPort(col("outlink")).as("dst_host"))
-          .filter(col("src_host") =!= col("dst_host"))
-      }
+      // one extraction feeds authority AND the graph
+      val anchors = UrlOps.extractAnchors(pages, "url", "html")
+        .select(UrlOps.hostNoPort(col("url")).as("src_host"),
+          UrlOps.hostNoPort(col("outlink")).as("dst_host"))
+        .filter(col("src_host") =!= col("dst_host"))
+        .materialized
       val auth = anchors.groupBy(col("dst_host").as("host"))
         .agg(count(lit(1)).cast("long").as("n_anchors"),
           countDistinct(col("src_host")).cast("long")
@@ -4497,21 +4320,14 @@ object SparkEntry {
           least(col("src_host"), col("dst_host")).as("ha"),
           greatest(col("src_host"), col("dst_host")).as("hb"))
         .distinct
-      val pr = PairGraph.of(s,
-          s"rank:undirected:i10:d0.85:anchoredges-modall:$dir") {
-          Analytics.pageRank(edges, "ha", "hb", iterations = 10,
-            damping = 0.85)
-        }
+      val pr = Analytics.pageRank(edges, "ha", "hb", iterations = 10,
+          damping = 0.85).materialized
         .select(col("node").as("host"), col("rank").as("pagerank"))
       // the authority score in BOTH variants: undirected (mutual-link
       // strength) and directed with dangling-mass redistribution (the
-      // web form — anchors already carry the src→dst direction); both
-      // rank frames are write-once registry artifacts
-      val prd = PairGraph.of(s,
-          s"rank:directed:i10:d0.85:anchoredges-modall:$dir") {
-          Analytics.pageRankDirected(anchors, "src_host",
-            "dst_host", iterations = 10, damping = 0.85)
-        }
+      // web form — anchors already carry the src→dst direction)
+      val prd = Analytics.pageRankDirected(anchors, "src_host",
+          "dst_host", iterations = 10, damping = 0.85).materialized
         .select(col("node").as("host"), col("rank").as("pagerank_directed"))
       // auth / pr / prd are per-HOST aggregates — registry-sized at
       // fixture scale but corpus-derived (a web-scale host registry is
@@ -4553,24 +4369,18 @@ object SparkEntry {
       import graft.functions.{TextAnalysis, UrlOps}
       val recs = Warc.readWarcFiles(s, warcV9FixtureDir(s, dir))
       // WAT lane: registry-sized metadata; no payload bytes past here.
-      // Write-once registry entry — the WAT pass over the segment runs
-      // once per (session, corpus), every later consumer reads it
-      val wat = PairGraph.of(s, s"watframe:v9:$dir") {
-        Warc.watFrame(recs)
-      }
-      // the resolved-redirect map is the segment's canonicalization
-      // artifact (url → final url) — write-once like the WAT frame it
-      // derives from; pointer doubling's log2(16)=4 materialize rounds
-      // run once per (session, corpus), not once per evaluation
-      val rd = PairGraph.of(s, s"redirects:resolved:h16:v9:$dir") {
-        Crawl.resolveRedirects(
-            wat.filter(col("redirect_location").isNotNull)
-              .select(col("url").as("src"),
-                col("redirect_location").as("dst")),
-            "src", "dst", maxHops = 16)
-          .filter(col("resolved"))
-          .select(col("url").as("__ru"), col("final_url"))
-      }
+      // Materialized: the redirect map and the authority lane both read it
+      val wat = Warc.watFrame(recs).materialized
+      // the resolved-redirect map: the segment's canonicalization
+      // artifact (url → final url)
+      val rd = Crawl.resolveRedirects(
+          wat.filter(col("redirect_location").isNotNull)
+            .select(col("url").as("src"),
+              col("redirect_location").as("dst")),
+          "src", "dst", maxHops = 16)
+        .filter(col("resolved"))
+        .select(col("url").as("__ru"), col("final_url"))
+        .materialized
       // WET lane: row-local verdicts at parse time — the raw text is
       // projected away before any join/aggregation touches the rows.
       // ALL THREE text verdicts (content digest, gopher gate,
@@ -4582,29 +4392,23 @@ object SparkEntry {
       // featurize pass over the segment, plus its explode + two keyed
       // aggregations + broadcast join + per-record gate join, all
       // collapse into the projection (guide §1.2 "don't compute things
-      // you throw away", §2.3 "project before the exchange")
-      // Write-once registry entry (the WAT-frame treatment for the WET
-      // lane): the per-document verdict frame — digest + combined
-      // gopher/classifier gate, all payload-free — is a function of
-      // (corpus segment, fixture weights) only, exactly the
-      // quality-scored document index a pipeline materializes once per
-      // segment and every curation pass reads. First use inside the
-      // measured run decodes the segment; later passes read the
-      // registry-sized artifact (guide §1.2 — remove repeated passes)
-      val scored = PairGraph.of(s, s"wetverdicts:v9:$dir") {
-        val wet = Warc.documentsFrame(
-          recs.filter(col("warc_type") === "conversion"))
-        val warr = TextAnalysis.classifierWeightArray(
-          TextAnalysis.classifierFixtureWeights(s), buckets = 4096)
-        val clsc = graft.expressions.ClassifierScore
-          .score(col("text"), warr.toSeq)
-        wet.select(col("url"), col("record_id"),
+      // you throw away", §2.3 "project before the exchange").
+      // The per-document verdict frame — digest + combined
+      // gopher/classifier gate, all payload-free — is materialized so
+      // the segment is decoded once
+      val wet = Warc.documentsFrame(
+        recs.filter(col("warc_type") === "conversion"))
+      val warr = TextAnalysis.classifierWeightArray(
+        TextAnalysis.classifierFixtureWeights(s), buckets = 4096)
+      val clsc = graft.expressions.ClassifierScore
+        .score(col("text"), warr.toSeq)
+      val scored = wet.select(col("url"), col("record_id"),
           col("warc_date"), sha2(col("text"), 256).as("__tsha"),
           (TextAnalysis.gopherRules(col("text"), minStopHits = 1)
             .getField("pass") &&
             clsc.isNotNull && clsc.getField("n_feats") > 0 &&
             clsc.getField("score_sum") > 0).as("__pass"))
-      }
+        .materialized
       // redirect rewrite: url-registry-sized map — NOT broadcast, AQE
       // picks the strategy (the q_redirected_dedup discipline)
       val rewritten = scored.join(rd, scored("url") === col("__ru"),
@@ -4618,15 +4422,11 @@ object SparkEntry {
       // the materialized blocks are registry-sized. The r14 form
       // re-parsed the gzip segment per consumer: 3 extra full decode
       // passes per run (guide §1.2 — remove unnecessary passes; §8 —
-      // decide on small rows). Registry entry like the WAT/WET lanes:
-      // the segment's header index is derived once per (session,
-      // corpus), so the whole query's steady-state reads ZERO segment
-      // bytes — all three lanes serve from write-once artifacts
-      val env = PairGraph.of(s, s"envelope:v9:$dir") {
-        recs.select(col("warc_type"), col("target_uri"),
+      // decide on small rows)
+      val env = recs.select(col("warc_type"), col("target_uri"),
           col("record_id"), col("warc_date"), col("headers"),
           col("error"))
-      }
+        .materialized
       val rv = env.filter(col("warc_type") === "revisit")
         .select(col("target_uri").as("url"), col("record_id"),
           col("warc_date"))
@@ -4636,15 +4436,11 @@ object SparkEntry {
         .agg(min_by(struct(kept.columns.map(col): _*),
           col("canonical_url")).as("__r"))
         .select(kept.columns.map(c => col(s"__r.`$c`").as(c)): _*)
-      // the curated keep-list IS the pipeline's per-snapshot output
-      // registry (feeds counts AND the mixture) — write-once; the
-      // rewrite → keep-latest → dedup → gate cascade above folds into
-      // its first derivation, downstream rollups/mixture stay live
-      val cur = PairGraph.of(s, s"curated:v9:$dir") {
-        dd.filter(col("__pass"))
-          .withColumn("source", regexp_extract(col("canonical_url"),
-            "https://([a-z0-9]+)\\.example\\.com/", 1))
-      }
+      // the curated keep-list feeds counts AND the mixture
+      val cur = dd.filter(col("__pass"))
+        .withColumn("source", regexp_extract(col("canonical_url"),
+          "https://([a-z0-9]+)\\.example\\.com/", 1))
+        .materialized
       val srcs = cur.groupBy("source")
         .agg(count(lit(1)).as("n_curated"),
           max(col("last_seen")).as("last_seen_max"))
@@ -4657,22 +4453,17 @@ object SparkEntry {
         .agg(count(lit(1)).cast("long").as("n_linking_pages"),
           countDistinct(col("src_host")).cast("long")
             .as("n_link_sources"))
-      val prd = PairGraph.of(s,
-          s"rank:directed:i10:d0.85:watlinks-v9:$dir") {
-          Analytics.pageRankDirected(lk, "src_host", "dst_host",
-            iterations = 10, damping = 0.85)
-        }
+      val prd = Analytics.pageRankDirected(lk, "src_host", "dst_host",
+          iterations = 10, damping = 0.85).materialized
         .select(col("node").as("host"),
           col("rank").as("pagerank_directed"))
       // weighted variant: edge weight = linking-page count per host
-      // pair — the anchor-count authority signal, same registry shape
-      val prw = PairGraph.of(s,
-          s"rank:weighted:i10:d0.85:watlinks-v9:$dir") {
-          Analytics.pageRankDirectedWeighted(
-            lk.groupBy("src_host", "dst_host")
-              .agg(count(lit(1)).cast("double").as("w")),
-            "src_host", "dst_host", "w", iterations = 10, damping = 0.85)
-        }
+      // pair — the anchor-count authority signal
+      val prw = Analytics.pageRankDirectedWeighted(
+          lk.groupBy("src_host", "dst_host")
+            .agg(count(lit(1)).cast("double").as("w")),
+          "src_host", "dst_host", "w", iterations = 10, damping = 0.85)
+        .materialized
         .select(col("node").as("host"),
           col("rank").as("pagerank_weighted"))
       // per-host frames are corpus-derived — unhinted equi-joins, AQE
@@ -4724,15 +4515,6 @@ object SparkEntry {
     "q_seeded_frontier" -> ((s, dir) => {
       import s.implicits._
       import graft.functions.UrlOps
-      // Write-once registry artifact (the crawlFrontier/fetch-schedule
-      // treatment, named a registry candidate in this round's notes):
-      // the priced fetch schedule is a pure function of (corpus,
-      // robots/crawl-delay fixtures, k=7, bot) — the artifact a polite
-      // fetcher executes, derived once per (session, corpus) inside the
-      // measured run; consumers re-read the registry-sized frame. The
-      // full sitemap→seen→policy→quota→pricing chain still runs, on
-      // first use (guide §2.4 — don't re-derive shared artifacts)
-      PairGraph.of(s, s"frontier:seeded:sitemap:k7:graftbot:$dir") {
       val id = col("doc_id").cast("string")
       val day = lpad(((col("doc_id") % 28) + 1).cast("string"), 2, "0")
       val loc = concat(lit("https://"), col("source"),
@@ -4787,7 +4569,7 @@ object SparkEntry {
           ((col("frontier_rank") - 1) *
             coalesce(col("crawl_delay_s"), lit(1.0)) * 1000)
             .cast("long").as("fetch_offset_ms"))
-      }.orderBy("host", "loc")
+        .orderBy("host", "loc")
     }),
     "q_url_parts" -> ((s, dir) => {
       import graft.functions.UrlOps

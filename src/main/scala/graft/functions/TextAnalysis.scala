@@ -1271,36 +1271,6 @@ object TextAnalysis {
     val vocab = perDoc.groupBy("bg").agg(sum(col("c")).as("n"))
       .orderBy(desc("n"), asc("bg")).limit(vocabK)
       .select(col("bg"), lit(1).as("in_vocab"))
-    scoreOov(perDoc, vocab)
-  }
-
-  /** TRAIN half of the oovRate split — the top-k bigram vocabulary as
-    * a shippable model table ((bg, in_vocab=1), ≤ k rows): summing
-    * per-doc counts per bigram IS the corpus count, so this is the
-    * exact vocabulary the one-shot [[oovRate]] derives internally.
-    * Same deterministic (count desc, bigram asc) cut. */
-  def oovVocab(df: DataFrame, textCol: String, vocabK: Int): DataFrame =
-    df.select(explode(wordNgrams(col(textCol), 2)).as("bg"))
-      .groupBy("bg").agg(count(lit(1)).as("n"))
-      .orderBy(desc("n"), asc("bg")).limit(vocabK)
-      .select(col("bg"), lit(1).as("in_vocab"))
-
-  /** APPLY half — score against a SHIPPED vocabulary table (the
-    * unigramApplyTable/classifierApplyTable precedent: production
-    * trains the vocabulary once per corpus snapshot and scores many
-    * times). One explode + per-doc aggregation + broadcast join; no
-    * reuse barrier needed because the vocabulary no longer derives
-    * from the same subtree. ≡ the one-shot form when `vocab` =
-    * [[oovVocab]] over the same corpus (TextAnalysisSpec pins it). */
-  def oovRate(df: DataFrame, idCol: String, textCol: String,
-      vocab: DataFrame): DataFrame =
-    scoreOov(
-      df.select(col(idCol).as("doc_id"),
-          explode(wordNgrams(col(textCol), 2)).as("bg"))
-        .groupBy("doc_id", "bg").agg(count(lit(1)).as("c")),
-      vocab)
-
-  private def scoreOov(perDoc: DataFrame, vocab: DataFrame): DataFrame =
     perDoc.join(broadcast(vocab), Seq("bg"), "left")
       .groupBy("doc_id")
       .agg(sum(col("c")).as("n_bigrams"),
@@ -1308,6 +1278,7 @@ object TextAnalysis {
           .as("n_oov"))
       .withColumn("oov_rate",
         col("n_oov").cast("double") / col("n_bigrams"))
+  }
 
   /** Per-document unigram cross-entropy under the corpus's OWN unigram
     * LM: bits_per_token = −(1/|d|) Σ_t log₂(count(t)/N). The CCNet/
@@ -1394,70 +1365,6 @@ object TextAnalysis {
       .join(ugCounts, Seq("w2"))
       .crossJoin(broadcast(total))
       .select(col("w1"), col("w2"), (-log2(p)).as("__b"))
-    scoreBigramBits(perDocBg, bits)
-  }
-
-  /** TRAIN half of the bigram-LM split — the interpolated model
-    * collapsed to its shippable bits table ((w1, w2, __b = −log₂ p),
-    * one row per OBSERVED bigram type): the .arpa-analog artifact a
-    * pipeline trains once per corpus snapshot. Corpus bigram counts
-    * are derived directly (≡ summing [[bigramCrossEntropy]]'s per-doc
-    * counts per type), the unigram/context/N chain is identical, so
-    * the table is bit-for-bit the one the one-shot form builds
-    * internally (TextAnalysisSpec pins it). */
-  def bigramBitsTable(df: DataFrame, textCol: String,
-      lambda: Double = 0.7): DataFrame = {
-    require(lambda > 0.0 && lambda < 1.0, s"need 0 < lambda < 1, got $lambda")
-    val bgCounts = df
-      .select(explode(wordNgrams(col(textCol), 2)).as("bg"))
-      .select(substring_index(col("bg"), " ", 1).as("w1"),
-        substring_index(col("bg"), " ", -1).as("w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c_bg"))
-      .materialized // context counts and the bits table both read it
-    val ctxCounts = bgCounts.groupBy("w1").agg(sum(col("c_bg")).as("c_ctx"))
-    val ugCounts = df
-      .filter(length(trim(col(textCol))) > 0)
-      .select(explode(tokens(col(textCol))).as("w2"))
-      .groupBy("w2").agg(count(lit(1)).as("c_ug"))
-    val total = ugCounts.agg(sum(col("c_ug")).as("__N"))
-    val p = lit(lambda) * (col("c_bg").cast("double") / col("c_ctx")) +
-      lit(1.0 - lambda) * (col("c_ug").cast("double") / col("__N"))
-    bgCounts
-      .join(ctxCounts, Seq("w1"))
-      .join(ugCounts, Seq("w2"))
-      .crossJoin(broadcast(total))
-      .select(col("w1"), col("w2"), (-log2(p)).as("__b"))
-  }
-
-  /** APPLY half — score documents against a SHIPPED bits table (the
-    * oovRate/unigramApplyTable precedent): one explode + per-doc
-    * aggregation + one bigram-keyed join; no reuse barrier because the
-    * model no longer derives from the same subtree. ≡ the one-shot
-    * form when `bits` = [[bigramBitsTable]] over the same corpus.
-    *
-    * SAME-CORPUS RESTRICTION (r16, ADVICE): the score join is INNER on
-    * the observed-bigram table, so a bigram UNSEEN at train time is
-    * excluded from both `n_bigrams` and the bit sum, and an all-OOV
-    * doc yields no row — exactly the one-shot form's semantics (and
-    * the DuckDB oracle's), where every apply bigram is by definition
-    * in the table. Scoring a DIFFERENT corpus under a shipped table
-    * silently treats OOV bigrams as zero-cost; a cross-corpus caller
-    * that wants backoff must densify `bits` with an explicit unk row
-    * per OOV bigram FIRST (changing the registered semantics here
-    * would break the one-shot ≡ split pin and the oracle hashes). */
-  def bigramCrossEntropy(df: DataFrame, idCol: String, textCol: String,
-      bits: DataFrame): DataFrame =
-    scoreBigramBits(
-      df.select(col(idCol).as("doc_id"),
-          explode(wordNgrams(col(textCol), 2)).as("bg"))
-        .groupBy("doc_id", "bg").agg(count(lit(1)).as("c"))
-        .select(col("doc_id"),
-          substring_index(col("bg"), " ", 1).as("w1"),
-          substring_index(col("bg"), " ", -1).as("w2"), col("c")),
-      bits)
-
-  private def scoreBigramBits(perDocBg: DataFrame,
-      bits: DataFrame): DataFrame =
     perDocBg
       .join(bits, Seq("w1", "w2"))
       .groupBy("doc_id")
@@ -1465,6 +1372,7 @@ object TextAnalysis {
         sum(col("c").cast("double") * col("__b")).as("__bits"))
       .select(col("doc_id"), col("n_bigrams"),
         (col("__bits") / col("n_bigrams")).as("bits_per_token"))
+  }
 
   /** DSIR-style importance weights (Xie et al. 2023, "Data Selection
     * for Language Models via Importance Resampling"): featurize each
@@ -1520,86 +1428,12 @@ object TextAnalysis {
       .join(tgt, Seq("bucket"), "left")
       .crossJoin(totals)
       .select(col("bucket"), logRatio.as("__lr"))
-    scoreDsir(feats.select(col("doc_id"), col("bucket"), col("c")),
-      scores)
-  }
-
-  /** TRAIN half of the DSIR split — the fitted importance estimator as
-    * a shippable model table ((bucket, __lr = ln p̂_t/p̂_r), ≤ `buckets`
-    * rows): the paper's estimator is fit once per (target, corpus
-    * snapshot) and scores many candidate pools. Bucket counts derive
-    * directly from the feature stream (≡ summing [[dsirLogWeights]]'s
-    * per-doc counts per bucket — same sha52 hash, same add-one
-    * smoothing chain), so the table is bit-for-bit the one the
-    * one-shot form builds internally (TextAnalysisSpec pins it). */
-  def dsirModelTable(df: DataFrame, textCol: String, targetPred: Column,
-      buckets: Int = 4096): DataFrame = {
-    require(buckets >= 2 && buckets <= (1 << 20),
-      s"need 2 <= buckets <= 2^20, got $buckets")
-    val fb = df.select(targetPred.as("__tgt"),
-        explode(concat(
-          transform(tokens(col(textCol)), t => concat(lit("u:"), t)),
-          transform(wordNgrams(col(textCol), 2),
-            g => concat(lit("b:"), g)))).as("__f"))
-      .filter(col("__f") =!= "u:")
-      .select(col("__tgt"),
-        (sha52(col("__f")) % buckets).as("bucket"))
-      .groupBy("__tgt", "bucket").agg(count(lit(1)).as("c"))
-      .materialized // ≤ 2·buckets rows; feeds both model aggregations
-    val tgt = fb.filter(col("__tgt"))
-      .groupBy("bucket").agg(sum(col("c")).as("c_t"))
-    val raw = fb.groupBy("bucket").agg(sum(col("c")).as("c_r"))
-    val totals = raw.agg(sum(col("c_r")).as("__Cr")).crossJoin(
-      tgt.agg(coalesce(sum(col("c_t")), lit(0L)).as("__Ct")))
-    val logRatio =
-      log((coalesce(col("c_t"), lit(0L)) + lit(1L)).cast("double") /
-          (col("__Ct") + lit(buckets.toLong))) -
-      log((col("c_r") + lit(1L)).cast("double") /
-          (col("__Cr") + lit(buckets.toLong)))
-    raw
-      .join(tgt, Seq("bucket"), "left")
-      .crossJoin(totals)
-      .select(col("bucket"), logRatio.as("__lr"))
-  }
-
-  /** APPLY half — score documents against a SHIPPED model table (the
-    * oovRate/bigramBitsTable precedent): one featurize pass + per-doc
-    * aggregation + the bounded broadcast join; no reuse barrier
-    * because the model no longer derives from the same subtree. ≡ the
-    * one-shot form when `model` = [[dsirModelTable]] over the same
-    * corpus/target (the `buckets` used to build the model must match —
-    * the bucket ids are the join key).
-    *
-    * SAME-CORPUS RESTRICTION (r16, ADVICE): the model table holds only
-    * buckets OBSERVED in its build corpus, and the score join is
-    * INNER — an apply-doc bucket absent from the model contributes
-    * nothing to `n_feats`/`log_weight`, matching the one-shot form and
-    * the DuckDB oracle (where the reference corpus defines the bucket
-    * universe). A cross-corpus caller that wants add-one smoothing to
-    * cover unseen buckets must densify the model to the full
-    * 0..buckets-1 grid FIRST (c_t = c_r = 0 rows score
-    * log((0+1)/(Ct+B)) − log((0+1)/(Cr+B)) by the same formula);
-    * densifying HERE would change the registered queries' results. */
-  def dsirLogWeights(df: DataFrame, idCol: String, textCol: String,
-      model: DataFrame, buckets: Int): DataFrame =
-    scoreDsir(
-      df.select(col(idCol).as("doc_id"),
-          explode(concat(
-            transform(tokens(col(textCol)), t => concat(lit("u:"), t)),
-            transform(wordNgrams(col(textCol), 2),
-              g => concat(lit("b:"), g)))).as("__f"))
-        .filter(col("__f") =!= "u:")
-        .select(col("doc_id"),
-          (sha52(col("__f")) % buckets).as("bucket"))
-        .groupBy("doc_id", "bucket").agg(count(lit(1)).as("c")),
-      model)
-
-  private def scoreDsir(perDoc: DataFrame, scores: DataFrame): DataFrame =
-    perDoc
+    feats.select(col("doc_id"), col("bucket"), col("c"))
       .join(broadcast(scores), Seq("bucket"))
       .groupBy("doc_id")
       .agg(sum(col("c")).as("n_feats"),
         sum(col("c").cast("double") * col("__lr")).as("log_weight"))
+  }
 
   /** Token-distribution drift between two corpus snapshots — the TEXT
     * counterpart of [[graft.operators.Analytics.psiDrift]] (which

@@ -6,7 +6,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Reuse.ReuseOps
 
-/** Write-once near-duplicate pair-graph artifact.
+/** Write-once session registry for artifacts that several queries
+  * share.
+  *
+  * THE RULE: an entry must have at least two consuming queries, and
+  * its key must encode every parameter of the derivation. A frame only
+  * one query reads is derived live (`.materialized` where that query
+  * reads it more than once) — serving a query its own cached result is
+  * not a speed-up, it only hides the derivation from a warm pass.
   *
   * The components family — cluster labels, star contraction,
   * keep-best-per-cluster, leakage-safe split, drop-near-dups — all
@@ -30,18 +37,13 @@ import graft.Reuse.ReuseOps
   * to a table once per ingest batch ("derive once, join many"); the
   * session-scoped checkpoint is the single-JVM expression of that
   * contract — `reliable` mode is the long-lived-cluster form, where
-  * the edge list must survive executor loss. Keys are caller-chosen and must encode every parameter
-  * that changes the graph (corpus dir, n, threshold, banding, …) —
-  * [[graft.SparkEntry]] uses `"<kind>:<params>:<dir>"`.
+  * the edge list must survive executor loss. Keys are caller-chosen;
+  * [[graft.SparkEntry]] uses `"<kind>:<params>:<dir>"`, so a forgotten
+  * parameter (corpus dir, n, threshold, banding, …) would serve a stale
+  * artifact without any error.
   */
 object PairGraph {
   private val cache = new ConcurrentHashMap[String, DataFrame]()
-  // test observability (r16, ADVICE): each key's COLD derivation plan,
-  // captured BEFORE the materialize cut replaces it with a LogicalRDD
-  // leaf — PlanShapeSpec asserts the registered queries' registry
-  // wiring (not just the bare operator) keeps its join/cut shape
-  private val derivationPlans = new ConcurrentHashMap[
-    String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
   private val deriveLock = new Object
 
   /** Return the memoized pair graph for `key`, deriving and
@@ -65,9 +67,7 @@ object PairGraph {
       val again = cache.get(k)
       if (again != null) again
       else {
-        val d = derive
-        derivationPlans.put(key, d.queryExecution.optimizedPlan)
-        val v = d.materialized
+        val v = derive.materialized
         cache.put(k, v)
         v
       }
@@ -79,24 +79,7 @@ object PairGraph {
     * at the DataFrame level — dropping the map's strong reference makes
     * them ContextCleaner-reclaimable (weak-ref GC), which is the same
     * lifecycle every superseded checkpoint in the engine has. */
-  def clear(): Unit = {
-    cache.clear()
-    derivationPlans.clear()
-  }
-
-  /** The recorded cold-derivation plan whose (session-stripped) key
-    * starts with `keyPrefix` — None until that artifact has derived
-    * in this session. Test observability only. */
-  def derivationPlan(keyPrefix: String)
-      : Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
-    val it = derivationPlans.entrySet().iterator()
-    var found: Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = None
-    while (it.hasNext && found.isEmpty) {
-      val e = it.next()
-      if (e.getKey.startsWith(keyPrefix)) found = Some(e.getValue)
-    }
-    found
-  }
+  def clear(): Unit = cache.clear()
 
   /** Number of materialized graphs (observability for specs/bench). */
   def size: Int = cache.size()

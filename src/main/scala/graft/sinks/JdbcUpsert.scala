@@ -28,7 +28,13 @@ object JdbcUpsert {
       password: String,
       driver: String = "org.postgresql.Driver",
       batchSize: Int = 1000,
-      maxRetries: Int = 5)
+      maxRetries: Int = 5) {
+    // checked here, not in the executor task: a bad value would only
+    // fail once data arrives (`grouped(0)` throws; a negative retry
+    // count skips every attempt and then throws a null exception)
+    require(batchSize >= 1, s"batchSize must be >= 1, got $batchSize")
+    require(maxRetries >= 0, s"maxRetries must be >= 0, got $maxRetries")
+  }
 
   /** Postgres-dialect upsert text, same shape as the reference's sink SQL
     * (`DataStreamJob.java:189-192,207-210,223-227,241-252`). */

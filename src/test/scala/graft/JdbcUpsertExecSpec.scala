@@ -143,6 +143,16 @@ class JdbcUpsertExecSpec extends SparkSpec {
     assert(db.rowsOf("t").isEmpty)
   }
 
+  test("ConnConfig rejects a batch size below 1 or negative retries when built") {
+    // a bad value must fail on the driver, not as an NPE or a
+    // grouped(0) error inside an executor task once rows arrive
+    for ((b, r) <- Seq((0, 5), (-1, 5), (1000, -1))) {
+      intercept[IllegalArgumentException](
+        FakeDb.cfg("bad", batchSize = b, maxRetries = r))
+    }
+    assert(FakeDb.cfg("edge", batchSize = 1, maxRetries = 0).batchSize === 1)
+  }
+
   test("DO UPDATE overwrites non-key columns on replay (idempotent at-least-once)") {
     val db = FakeDb.fresh("upd")
     val first = Seq(("a", 1), ("b", 2)).toDF("k", "v")

@@ -73,6 +73,17 @@ class PairGraphSpec extends SparkSpec {
     PairGraph.clear()
   }
 
+  test("queries that read no shared artifact leave the registry empty") {
+    // the registry holds only artifacts two or more queries read; each
+    // of these derives everything it reads itself, so a single-query
+    // key creeping back in shows up as an entry here
+    PairGraph.clear()
+    Seq("q_simhash_pr", "q_oov_rate", "q_dsir_weights", "q_hll_union",
+        "q_countmin_joinsize")
+      .foreach(q => SparkEntry.queries(q)(spark, sf))
+    assert(PairGraph.size === 0)
+  }
+
   test("of() is reentrant: a derivation may read another registry key (rank-from-edges)") {
     // the rank registry's shape: the rank frame's derivation calls
     // of() for the EDGE frame. computeIfAbsent would throw "Recursive

@@ -114,13 +114,7 @@ class PlanShapeSpec extends SparkSpec {
     // self-join) with the bit_count Hamming filter BELOW the distinct
     // aggregate — the two historical post-candidate sig joins (which
     // shuffled every bucket collision twice more) must not reappear
-    // the registered query now serves the write-once registry artifact
-    // (a LogicalRDD read) — the guard targets the OPERATOR's join
-    // shape, so inspect the derivation itself, same call as the
-    // registry key's
-    val lp = graft.operators.Dedup.simhashNearDupPairs(
-        Tables.documents(spark, sf), "doc_id", "text", maxDist = 5,
-        tokenHash = graft.operators.Dedup.PortableSha)
+    val lp = SparkEntry.queries("q_simhash_neardup_wide")(spark, sf)
       .queryExecution.optimizedPlan
     val joins = lp.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
@@ -140,46 +134,6 @@ class PlanShapeSpec extends SparkSpec {
     }
     assert(hammingInJoin || hammingBelowAgg.nonEmpty,
       s"bit_count Hamming check gates neither the join nor a filter below the distinct:\n$lp")
-  }
-
-  test("registered registry wiring keeps its shape on the COLD derivation (wide simhash, oov vocab)") {
-    // complement to the two operator-level guards above/below (ADVICE
-    // r15): those assert the OPERATOR's shape, but the registered
-    // queries route through PairGraph and would not catch a wiring
-    // regression (key change, a non-broadcast join in the derivation).
-    // Clear the registry, invoke the registered queries, and assert on
-    // the recorded cold-derivation plans themselves.
-    import graft.operators.PairGraph
-    PairGraph.clear()
-    SparkEntry.queries("q_simhash_neardup_wide")(spark, sf)
-    SparkEntry.queries("q_oov_rate")(spark, sf)
-    val wide = PairGraph.derivationPlan("simhash:d5:sha")
-      .getOrElse(fail("q_simhash_neardup_wide no longer derives the simhash:d5:sha registry artifact"))
-    val joins = wide.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-    }
-    assert(joins.size === 1,
-      s"wide-simhash REGISTERED derivation: expected exactly one join:\n$wide")
-    val hammingInJoin = joins.head.condition
-      .exists(_.toString.toLowerCase.contains("bit_count"))
-    val hammingBelowAgg = wide.collect {
-      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate
-          if a.collect {
-            case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-                if f.condition.toString.toLowerCase.contains("bit_count") => f
-          }.nonEmpty => a
-    }
-    assert(hammingInJoin || hammingBelowAgg.nonEmpty,
-      s"wide-simhash REGISTERED derivation lost its Hamming gate:\n$wide")
-    val vocab = PairGraph.derivationPlan("oovvocab:bg:k1000")
-      .getOrElse(fail("q_oov_rate no longer derives the oovvocab:bg:k1000 registry artifact"))
-    // the vocab cut must stay a k-bounded local top-k (Limit over the
-    // count sort), never a global rank of the whole vocabulary
-    assert(vocab.collect {
-      case l: org.apache.spark.sql.catalyst.plans.logical.GlobalLimit => l
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalLimit => l
-    }.nonEmpty, s"oov vocab REGISTERED derivation lost its top-k cut:\n$vocab")
-    PairGraph.clear() // leave no half-warm registry for later suites
   }
 
   test("aggregation queries keep whole-stage codegen on the scan side") {
@@ -274,15 +228,9 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q_oov_rate: vocabulary broadcasts into the per-doc side") {
-    // the registered query serves the vocabulary from the write-once
-    // registry, so the vocab-cut shape is asserted on the TRAIN
-    // derivation (oovVocab) and the broadcast on the registered apply
-    val pv = graft.functions.TextAnalysis
-      .oovVocab(Tables.documents(spark, sf), "text", 1000)
-      .queryExecution.explainString(FormattedMode)
-    assert(pv.contains("TakeOrderedAndProject"),
-      "vocabulary cut must be a local-top-k, not a global sort")
     val p = plan("q_oov_rate")
+    assert(p.contains("TakeOrderedAndProject"),
+      "vocabulary cut must be a local-top-k, not a global sort")
     assert(p.contains("BroadcastHashJoin"),
       "k-row vocabulary must broadcast, not shuffle the per-doc counts")
   }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.PairGraph
+import graft.Reuse.ReuseOps
 
 /** The mode-selectable materialization primitive (round-6 verdict #2):
   * `local` (executor-pinned checkpoint) or `reliable` (checkpoint dir,
@@ -12,10 +13,16 @@ import graft.operators.PairGraph
 class ReuseSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withMode[A](m: String)(f: => A): A = {
-    spark.conf.set(Reuse.ModeKey, m)
-    try f finally spark.conf.unset(Reuse.ModeKey)
+  private def withConf[A](kv: (String, String)*)(f: => A): A = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
+
+  private def withMode[A](m: String)(f: => A): A = withConf(Reuse.ModeKey -> m)(f)
 
   for (m <- Seq("local", "reliable")) {
     test(s"mode=$m: materialize is eager and consumers share one derivation") {
@@ -55,6 +62,25 @@ class ReuseSpec extends SparkSpec {
         .count() finally listed.close()
       assert(subdirs === 1L, s"checkpoint dir re-set per materialize under $dir")
     } finally spark.conf.unset(Reuse.DirKey)
+  }
+
+  test("mode=local keeps a repartition(col) frame's hash partitioning: one exchange in the join") {
+    // the iterative rank/HITS operators repartition their edge frame by
+    // key once, materialize it and join it every round — only the other
+    // side may shuffle. AQE and broadcast off so the planned exchanges
+    // are the ones EnsureRequirements inserts
+    withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        Reuse.ModeKey -> "local") {
+      val edges = spark.range(200).select(col("id"), (col("id") % 7).as("v"))
+        .repartition(col("id")).materialized
+      val other = spark.range(200).select(col("id"), (col("id") * 2).as("w"))
+      val plan = edges.join(other, "id").queryExecution.executedPlan
+      val exchanges = plan.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }
+      assert(exchanges.size === 1, s"expected one exchange:\n$plan")
+    }
   }
 
   test("unknown mode fails loudly") {

@@ -405,23 +405,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(byId(3L) === ((3L, 2L, 2.0 / 3.0)))
   }
 
-  test("oovRate train/apply split ≡ the one-shot form on the same corpus") {
-    // the shipped-vocabulary apply path (oovVocab + the vocab overload)
-    // must land on exactly the one-shot rows — the registry-served
-    // q_oov_rate path's equivalence contract
-    val docs = Seq(
-      (1L, "a b c"), (2L, "a b c"), (3L, "a b x y"),
-      (4L, "solo"), (5L, "")
-    ).toDF("doc_id", "text")
-    val oneShot = TextAnalysis.oovRate(docs, "doc_id", "text", vocabK = 2)
-      .orderBy("doc_id").collect().toSeq
-    val vocab = TextAnalysis.oovVocab(docs, "text", vocabK = 2)
-    assert(vocab.count() === 2)
-    val split = TextAnalysis.oovRate(docs, "doc_id", "text", vocab)
-      .orderBy("doc_id").collect().toSeq
-    assert(split === oneShot)
-  }
-
   test("oovRate vocabulary cut is deterministic under count ties") {
     // two bigrams tie at count 1; (count desc, bigram asc) must keep
     // the lexicographically smaller one for any partitioning
@@ -431,52 +414,6 @@ class TextAnalysisSpec extends SparkSpec {
     // vocab = {"a b"}; doc 1 fully in-vocab, doc 2 fully OOV
     assert(out(0).getLong(2) === 0L)
     assert(out(1).getLong(2) === 1L && out(1).getDouble(3) === 1.0)
-  }
-
-  test("dsirLogWeights train/apply split ≡ the one-shot form") {
-    // the shipped model-table apply path (dsirModelTable + the model
-    // overload) must land on the one-shot rows — exact n_feats, the
-    // float column within summation-order ulps (the registry-served
-    // q_dsir_weights path's equivalence contract)
-    val docs = Seq(
-      (1L, "the quick brown fox", "en"),
-      (2L, "le renard brun rapide", "fr"),
-      (3L, "the lazy dog sleeps", "en"),
-      (4L, "", "en")
-    ).toDF("doc_id", "text", "lang")
-    val oneShot = TextAnalysis.dsirLogWeights(docs, "doc_id", "text",
-        col("lang") === "en", buckets = 64)
-      .orderBy("doc_id").collect().toSeq
-    val model = TextAnalysis.dsirModelTable(docs, "text",
-      col("lang") === "en", buckets = 64)
-    val split = TextAnalysis.dsirLogWeights(docs, "doc_id", "text",
-        model, buckets = 64)
-      .orderBy("doc_id").collect().toSeq
-    assert(split.map(r => (r.getLong(0), r.getLong(1))) ===
-      oneShot.map(r => (r.getLong(0), r.getLong(1))))
-    split.zip(oneShot).foreach { case (a, b) =>
-      assert(math.abs(a.getDouble(2) - b.getDouble(2)) < 1e-12) }
-  }
-
-  test("bigramCrossEntropy train/apply split ≡ the one-shot form") {
-    // the shipped bits-table apply path (bigramBitsTable + the bits
-    // overload) must land on the one-shot rows — exact counts, the
-    // float column within summation-order ulps (the registry-served
-    // q_bigram_logprob path's equivalence contract)
-    val docs = Seq(
-      (1L, "a b a"), (2L, "b a"), (3L, "solo"), (4L, "")
-    ).toDF("doc_id", "text")
-    val oneShot = TextAnalysis.bigramCrossEntropy(docs, "doc_id", "text",
-        lambda = 0.5)
-      .orderBy("doc_id").collect().toSeq
-    val bits = TextAnalysis.bigramBitsTable(docs, "text", lambda = 0.5)
-    val split = TextAnalysis.bigramCrossEntropy(docs, "doc_id", "text",
-        bits)
-      .orderBy("doc_id").collect().toSeq
-    assert(split.map(r => (r.getLong(0), r.getLong(1))) ===
-      oneShot.map(r => (r.getLong(0), r.getLong(1))))
-    split.zip(oneShot).foreach { case (a, b) =>
-      assert(math.abs(a.getDouble(2) - b.getDouble(2)) < 1e-12) }
   }
 
   test("unigramCrossEntropy: hand-computed bits under the corpus LM") {
