@@ -11,18 +11,28 @@ class SparkEntrySpec extends SparkSpec {
     assert(missing.isEmpty, s"oracleSql without queries: $missing")
   }
 
-  test("every query runs once on sf0.001: rows returned, columns aliased") {
-    // one build per query: the alias check reads the built frame's
-    // columns, and collect() (not count()) exhausts every output column,
-    // so Catalyst cannot prune a column under test out of the plan
-    SparkEntry.queries.foreach { case (name, fn) =>
+  // one build per query, shared by the two tests below: the alias check
+  // reads the built frame's columns, and collect() (not count()) exhausts
+  // every output column, so Catalyst cannot prune a column under test
+  private lazy val built: Seq[(String, Array[String], Boolean)] =
+    SparkEntry.queries.toSeq.map { case (name, fn) =>
       val df = fn(spark, sf)
-      // no unaliased aggregate names like sum(value): the oracle compare
-      // hashes sorted columns by name
-      df.columns.foreach { c =>
+      (name, df.columns, df.collect().nonEmpty)
+    }
+
+  test("every query runs and returns rows on sf0.001") {
+    built.foreach { case (name, _, nonEmpty) =>
+      assert(nonEmpty, s"query $name returned 0 rows")
+    }
+  }
+
+  test("query column names match oracle aliases (sorted-column hash contract)") {
+    // no unaliased aggregate names like sum(value): the oracle compare
+    // hashes sorted columns by name
+    built.foreach { case (name, cols, _) =>
+      cols.foreach { c =>
         assert(!c.contains("("), s"$name column '$c' looks unaliased")
       }
-      assert(df.collect().nonEmpty, s"query $name returned 0 rows")
     }
   }
 }
