@@ -8,11 +8,12 @@ import graft.{Model, Transaction}
 /** JSON → Transaction binding: the Spark analogue of the reference's
   * Jackson deserializer (`JSONValueDeserializationSchema.java:21-23`).
   *
-  * Everything is `from_json` against the declared schema — fully
-  * codegen'd, no UDF, no driver-side parsing, so it vectorizes across
-  * a 1000-executor scan. Malformed records become NULL structs
-  * (PERMISSIVE mode), mirroring Jackson's exception-per-record being
-  * the only failure path in the reference.
+  * Everything is `from_json` against the declared schema — no UDF, no
+  * driver-side parsing. `from_json` is interpreted, not codegen'd
+  * (`JsonToStructs` is a `CodegenFallback`), so each evaluation is a
+  * full Jackson parse of the record. Malformed records become NULL
+  * structs (PERMISSIVE mode), mirroring Jackson's exception-per-record
+  * being the only failure path in the reference.
   */
 object Json {
 
@@ -31,12 +32,19 @@ object Json {
 
   /** Parse a column of JSON strings into the full transaction struct and
     * flatten. Input: any DataFrame with a string column `jsonCol`.
-    * Output columns = Model.transactionSchema fields. */
+    * Output columns = Model.transactionSchema fields, one row per input
+    * row (a null or malformed record yields an all-null row).
+    *
+    * The flatten is a generator (`inline` of a one-element array), not
+    * `select("t.*")`: with a projection, the optimizer pushes a filter
+    * on the parsed fields (`validTransactions`) below it by copying
+    * `from_json` into the filter, so every record is parsed twice. A
+    * filter is pushed through a `Generate` only where it reads the
+    * generator's child, so here it stays above the one parse. */
   def parseTransactions(df: DataFrame, jsonCol: String = "value"): DataFrame =
-    df.select(
-        from_json(col(jsonCol).cast("string"), Model.transactionSchema,
-          parseOptions).as("t"))
-      .select("t.*")
+    df.select(inline(array(
+      from_json(col(jsonCol).cast("string"), Model.transactionSchema,
+        parseOptions))))
 
   /** Typed variant for callers that want compile-time field checks. */
   def parseTransactionsTyped(df: DataFrame, jsonCol: String = "value")(

@@ -28,8 +28,9 @@ import graft.sinks.JdbcUpsert.ConnConfig
   *     end-state as Flink's per-record emission;
   *   - idempotency: replays re-write the same totals (at-least-once safe),
   *     unlike a per-batch delta + additive upsert, which double-counts.
-  * Kafka serves multiple consumers from the page cache; the extra reads
-  * are projection-pruned to the few columns each pipeline needs. State is
+  * Kafka serves multiple consumers from the page cache, but each query
+  * parses every record in full: with the parse options set, `from_json`
+  * converts all 12 fields whatever the pipeline reads. State is
   * unwindowed, exactly like the reference (no watermark,
   * `DataStreamJob.java:98`), so it grows with key cardinality: one entry
   * per category, per day and per month ever seen, which for a wide

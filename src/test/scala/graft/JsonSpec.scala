@@ -53,6 +53,28 @@ class JsonSpec extends SparkSpec {
     assert(valid.count() === 1L)
   }
 
+  test("parseTransactions keeps one row per record; null and malformed records are all-null rows") {
+    val rows = Seq(
+      Some(generatorRecord),
+      None,
+      Some("not json"),
+      Some("""{"productId":"product1"}"""),
+      Some("""{"transactionId":"t-no-date","totalAmount":1.0}"""))
+    val parsed = Json.parseTransactions(rows.toDF("value"))
+    assert(parsed.columns.toSeq === graft.Model.transactionSchema.fieldNames.toSeq)
+    val out = parsed.collect()
+    assert(out.length === 5)
+    // the null and the malformed input: every field null
+    assert(out.count(r => (0 until r.length).forall(r.isNullAt)) === 2)
+    assert(out.exists(r => r.getAs[String]("productId") == "product1" &&
+      r.getAs[String]("transactionId") == null))
+    assert(out.exists(r => r.getAs[String]("transactionId") == "t-no-date" &&
+      r.getAs[java.sql.Timestamp]("transactionDate") == null))
+    // validTransactions drops all four dead-letter rows
+    assert(Json.validTransactions(parsed).collect().map(_.getAs[String]("transactionId"))
+      .toSeq === Seq("7e57d004-2b97-4c7a-9d3e-000000000001"))
+  }
+
   test("readJsonlFiles quarantines corrupt lines with their raw text preserved") {
     import org.apache.spark.sql.types.{LongType, StringType, StructType}
     val dir = java.nio.file.Files.createTempDirectory("jsonl").toFile
