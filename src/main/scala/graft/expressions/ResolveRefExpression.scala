@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** RFC 3986 §5.2 reference resolution as ONE whole-stage-codegen
-  * scalar — the compiled form of `UrlOps.resolveRefColumns`.
+  * scalar — the compiled form of ResolveRefSpec's Column-algebra
+  * `resolveRefColumns`.
   *
   * Why an expression: the Column formulation is the crawl tier's
   * hottest per-link projection (every extracted href of every fetched

@@ -56,12 +56,6 @@ object TextAnalysis {
     when(tokenCount(text) === 0, lit(0.0))
       .otherwise(stopwordCount(text).cast("double") / tokenCount(text))
 
-  def avgTokenLength(text: Column): Column =
-    when(tokenCount(text) === 0, lit(0.0))
-      .otherwise(
-        aggregate(tokens(text), lit(0L), (acc, t) => acc + length(t))
-          .cast("double") / tokenCount(text))
-
   /** All scalar text features in one struct via the one-pass custom
     * `TextStats` expression (see its Scaladoc for why the Column-only
     * formulation tokenizes once per feature). Fields: token_count,
@@ -99,9 +93,6 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "les", "et", "des", "est", "une", "dans"),
     "zh" -> Seq("的", "是", "了", "在", "和", "有", "我", "不")
   )
-
-  private def markerHits(text: Column, markers: Seq[String]): Column =
-    size(filter(tokens(text), t => t.isInCollection(markers)))
 
   /** Predicted language = argmax marker hits; ties break in `langMarkers`
     * declaration order; zero hits everywhere → "und" (undetermined);
@@ -266,18 +257,6 @@ object TextAnalysis {
           col("n_cyrillic") >= col("n_arabic"), lit("cyrillic"))
         .when(col("n_cjk") >= col("n_arabic"), lit("cjk"))
         .otherwise(lit("arabic")).as("dominant"))
-  }
-
-  /** Column-only reference implementation of [[langId]], kept as the
-    * parity spec for the custom expression (asserted equal in tests). */
-  def langIdColumns(text: Column): Column = {
-    val scores = langMarkers.map { case (lang, ms) => lang -> markerHits(text, ms) }
-    val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
-    val cases = scores.foldLeft(when(best === 0, lit("und"))) {
-      case (acc, (lang, s)) => acc.when(s === best, lit(lang))
-    }
-    when(text.isNull, lit(null).cast("string"))
-      .otherwise(cases.otherwise(lit("und")))
   }
 
   /** Rabin–Karp-style rolling fingerprint over the character stream:
@@ -945,8 +924,8 @@ object TextAnalysis {
       minStopHits: Int = 2): Column = {
     // raw counts from ONE codegen scan (graft.expressions.GopherStats);
     // the getField references below CSE onto a single evaluation inside
-    // whole-stage codegen — the Column formulation (kept as
-    // gopherRulesColumns for the parity spec) cloned its interpreted
+    // whole-stage codegen — the Column formulation (kept in
+    // TextAnalysisSpec as the parity reference) cloned its interpreted
     // tokenize/line-split HOF subtrees into every feature instead
     // (measured 2.25 s → 0.72 s for the two gopher queries at sf0.1)
     val st = graft.expressions.GopherStats.stats(text, gopherStops)
@@ -961,51 +940,6 @@ object TextAnalysis {
     val alphaFrac = when(nWords === 0, lit(0.0))
       .otherwise(st.getField("alpha_words").cast("double") / nWords)
     val stopHits = st.getField("stop_hits").cast("long")
-    val pass = nWords >= minWords && nWords <= maxWords &&
-      meanLen >= minMeanLen && meanLen <= maxMeanLen &&
-      symbolRatio <= maxSymbolRatio && bulletFrac <= maxBulletFrac &&
-      ellipsisFrac <= maxEllipsisFrac && alphaFrac >= minAlphaFrac &&
-      stopHits >= minStopHits
-    struct(
-      nWords.as("n_words"), meanLen.as("mean_word_len"),
-      symbolRatio.as("symbol_ratio"), bulletFrac.as("bullet_line_frac"),
-      ellipsisFrac.as("ellipsis_line_frac"), alphaFrac.as("alpha_word_frac"),
-      stopHits.as("stop_hits"), pass.as("pass"))
-  }
-
-  /** The Column-built-ins reference formulation of [[gopherRules]] —
-    * semantically identical, kept for the parity spec (the LangId /
-    * TextStats discipline: every custom expression is pinned against a
-    * compositional reference). Slower by design: the interpreted HOF
-    * subtrees (tokenize ×4, line split ×2) clone into every feature. */
-  def gopherRulesColumns(text: Column,
-      minWords: Long = 50L, maxWords: Long = 100000L,
-      minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
-      maxSymbolRatio: Double = 0.1, maxBulletFrac: Double = 0.9,
-      maxEllipsisFrac: Double = 0.3, minAlphaFrac: Double = 0.8,
-      minStopHits: Int = 2): Column = {
-    val toks = tokens(text)
-    val nWords = when(length(trim(text)) === 0, lit(0L))
-      .otherwise(size(toks).cast("long"))
-    val lenSum = aggregate(toks, lit(0L), (acc, t) => acc + length(t))
-    val meanLen = when(nWords === 0, lit(0.0))
-      .otherwise(lenSum.cast("double") / nWords)
-    // the paper's "symbol" set: hash marks and ellipses ("..." or '…')
-    val symbols = (regexp_count(text, lit("#")) +
-      regexp_count(text, lit("(\\.\\.\\.|…)"))).cast("long")
-    val symbolRatio = when(nWords === 0, lit(0.0))
-      .otherwise(symbols.cast("double") / nWords)
-    val lines = split(text, "\n")
-    val nLines = size(lines).cast("long")
-    val bulletFrac = size(filter(lines, l => l.rlike("^\\s*[-*•]")))
-      .cast("double") / nLines
-    val ellipsisFrac = size(filter(lines, l => l.rlike("(\\.\\.\\.|…)\\s*$")))
-      .cast("double") / nLines
-    val alphaWords = size(filter(toks, t => t.rlike("[A-Za-z]"))).cast("long")
-    val alphaFrac = when(nWords === 0, lit(0.0))
-      .otherwise(alphaWords.cast("double") / nWords)
-    val stopHits = size(array_intersect(
-      array(gopherStops.map(lit): _*), toks)).cast("long")
     val pass = nWords >= minWords && nWords <= maxWords &&
       meanLen >= minMeanLen && meanLen <= maxMeanLen &&
       symbolRatio <= maxSymbolRatio && bulletFrac <= maxBulletFrac &&

@@ -429,29 +429,6 @@ object UrlOps {
       .filter(col("__d").isNotNull && col("__d") >= 0)
       .groupBy("host").agg(max(col("__d")).as("crawl_delay_s"))
 
-  /** RFC 3986 §5.2.4 remove_dot_segments over an ABSOLUTE path, as a
-    * scan-local array fold: split on '/', skip `.` and empty segments
-    * (collapsing `//` runs — a deliberate crawl normalization), pop on
-    * `..` without ever popping above root, re-join, and restore the
-    * directory-reference trailing slash (`/a/b/.` → `/a/b/`,
-    * `/a/b/..` → `/a/`). Leading `..` above root is removed, per the
-    * RFC's loop. */
-  private def removeDotSegments(p: Column): Column = {
-    val folded = aggregate(split(p, "/"),
-      array(lit("")),
-      (acc, s) =>
-        when(s === "" || s === ".", acc)
-          .when(s === "..",
-            when(size(acc) > 1, slice(acc, lit(1), size(acc) - 1))
-              .otherwise(acc))
-          .otherwise(concat(acc, array(s))))
-    val joined = array_join(folded, "/")
-    val base = when(joined === "", lit("/")).otherwise(joined)
-    // a reference ending in '/', '/.', or '/..' denotes a directory
-    when(p.rlike("/(\\.|\\.\\.)?$") && !base.endsWith("/"),
-      concat(base, lit("/"))).otherwise(base)
-  }
-
   /** RFC 3986 §5.2 reference resolution: absolutize `ref` against the
     * absolute URL `base`. Fragments are stripped first (a crawl
     * frontier never distinguishes same-document references); NULL for
@@ -460,64 +437,23 @@ object UrlOps {
     * absolute refs pass through untouched; protocol-relative `//h/p`
     * inherits the base scheme; absolute paths replace the base path;
     * relative paths merge with the base directory (RFC §5.2.3) and
-    * run [[removeDotSegments]]; a query-only ref keeps the base path.
+    * run RFC §5.2.4 remove_dot_segments; a query-only ref keeps the
+    * base path.
     * Scan-local and whole-stage-codegen'd — composes with
     * [[canonical]] / [[stripTracking]] downstream.
     *
     * Compiled as [[graft.expressions.ResolveRef]] (one static JVM call
-    * per link): the Column formulation below, kept as the executable
-    * semantics reference, evaluates three `aggregate` higher-order
-    * functions per row — CodegenFallback nodes that put interpreted
-    * per-segment lambda evaluation inside the crawl tier's hottest
-    * projection. ResolveRefSpec pins expression ≡ Column form over an
+    * per link): the Column formulation, kept in ResolveRefSpec as the
+    * executable semantics reference, evaluates three `aggregate`
+    * higher-order functions per row — CodegenFallback nodes that put
+    * interpreted per-segment lambda evaluation inside the crawl tier's
+    * hottest projection. ResolveRefSpec pins expression ≡ Column form over an
     * adversarial input matrix; the q_outlinks / q_anchor_* /
     * q_crawl_bfs oracles adjudicate end-to-end. */
   def resolveRef(base: Column, ref: Column): Column = {
     import org.apache.spark.sql.graftglue.Bridge
     Bridge.column(graft.expressions.ResolveRef(
       Bridge.expression(base), Bridge.expression(ref)))
-  }
-
-  /** The Column-algebra form of [[resolveRef]] — the semantics
-    * reference the compiled expression is differentially tested
-    * against (ResolveRefSpec). Not used in query paths: its
-    * [[removeDotSegments]] aggregate HOFs are interpreted. */
-  private[graft] def resolveRefColumns(base: Column, ref: Column): Column = {
-    val r = regexp_replace(ref, "#.*$", "")
-    val sch = lower(scheme(base))
-    val hostPart = host(base)
-    val bPath = path(base)
-    val rPath = regexp_extract(r, "^([^?]*)", 1)
-    val rQuery = regexp_extract(r, "(\\?.*)$", 1)
-    // base directory per §5.2.3: everything up to the last '/'; an
-    // authority-backed empty base path merges as root
-    val baseDir = regexp_extract(bPath, "^(.*/)", 1)
-    val merged = when(baseDir === "", concat(lit("/"), rPath))
-      .otherwise(concat(baseDir, rPath))
-    // §5.2.2 applies remove_dot_segments to EVERY reference, absolute
-    // ones included — an un-normalized /public/../private/x would both
-    // evade a prefix-matched robots Disallow (the under-block
-    // direction) and miss the seen set. Scheme/host casing is left
-    // untouched (canonical() owns case folding); empty paths pass
-    // through (a bare-domain URL has nothing to normalize).
-    def normAbs(u: Column): Column = {
-      val p = path(u)
-      when(p === "", u).otherwise(concat(
-        regexp_extract(u, "^([a-zA-Z][a-zA-Z0-9+.-]*)", 1), lit("://"),
-        host(u), removeDotSegments(p),
-        regexp_extract(u, "(\\?.*)$", 1)))
-    }
-    when(trim(r) === "", lit(null).cast("string"))
-      .when(r.rlike("^(?i)https?://"), normAbs(r))
-      .when(r.rlike("^[a-zA-Z][a-zA-Z0-9+.-]*:"), lit(null).cast("string"))
-      .when(r.startsWith("//"), normAbs(concat(sch, lit(":"), r)))
-      .when(r.startsWith("/"),
-        concat(sch, lit("://"), hostPart, removeDotSegments(rPath), rQuery))
-      .when(rPath === "", // query-only ref: keep the base path
-        concat(sch, lit("://"), hostPart,
-          when(bPath === "", lit("/")).otherwise(bPath), rQuery))
-      .otherwise(
-        concat(sch, lit("://"), hostPart, removeDotSegments(merged), rQuery))
   }
 
   /** The [[graft.expressions.HtmlLinks]] scan + effective-base column

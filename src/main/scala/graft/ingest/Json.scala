@@ -1,9 +1,9 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Model, Transaction}
+import graft.Model
 
 /** JSON → Transaction binding: the Spark analogue of the reference's
   * Jackson deserializer (`JSONValueDeserializationSchema.java:21-23`).
@@ -46,13 +46,6 @@ object Json {
       from_json(col(jsonCol).cast("string"), Model.transactionSchema,
         parseOptions))))
 
-  /** Typed variant for callers that want compile-time field checks. */
-  def parseTransactionsTyped(df: DataFrame, jsonCol: String = "value")(
-      implicit spark: SparkSession): Dataset[Transaction] = {
-    import spark.implicits._
-    parseTransactions(df, jsonCol).as[Transaction]
-  }
-
   /** Drop records Jackson would have thrown on (all-null struct ⇒
     * unparseable, or missing the PK) AND records without a parseable
     * event time: a null transactionDate would otherwise flow into the
@@ -63,14 +56,6 @@ object Json {
   def validTransactions(parsed: DataFrame): DataFrame =
     parsed.filter(
       col("transactionId").isNotNull && col("transactionDate").isNotNull)
-
-  /** Object → JSON string (reference `JsonUtil.java:10-16`, used for the
-    * ES `_source` payload). Pins the same timestampFormat as the parse
-    * side so emitted JSON is re-parseable (round-trip safe). */
-  def toJsonColumn(df: DataFrame): DataFrame =
-    df.withColumn("json",
-      to_json(struct(df.columns.map(col): _*),
-        Map("timestampFormat" -> generatorTimestampFormat)))
 
   /** JSONL file source with corrupt-record quarantine — the batch/file
     * twin of the Kafka JSON path, hardened for what a 100 TB crawl

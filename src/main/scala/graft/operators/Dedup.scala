@@ -896,50 +896,7 @@ object Dedup {
           col("n_shingles")).as("contamination"))
   }
 
-  /** Bloom-filter form of [[ngramContamination]] — the path for probe
-    * sets too large to broadcast as exact distinct shingles (a full
-    * eval-suite library in many languages can reach GBs of distinct
-    * n-grams; a bloom of the same set is `bitsPerItem`/8 bytes per
-    * shingle). The probe shingles fold into ONE bloom via the map-side-
-    * combining `bloom_filter_agg`, and each corpus doc counts its
-    * might-contain shingles scan-locally — no join, no shuffle beyond
-    * the per-doc count aggregation.
-    *
-    * Error is ONE-SIDED, the safe direction for decontamination: a
-    * bloom has no false negatives, so `shared_shingles` here is ≥ the
-    * exact count for every doc (never under-reports leakage) and
-    * over-reports by ~fpp of the doc's clean shingles. A gate built on
-    * this operator drops a superset of what the exact gate drops.
-    * Same caps/type contract as [[bloomAntiJoin]]; output schema
-    * matches [[ngramContamination]]. */
-  def ngramContaminationBloom(docs: DataFrame, idCol: String, textCol: String,
-      probes: DataFrame, probeTextCol: String, n: Int,
-      expectedProbeShingles: Long, bitsPerItem: Int = 8): DataFrame = {
-    val sets = docs.select(
-        col(idCol).as("id"),
-        graft.expressions.ShingleExpressions
-          .distinctWordNgrams(col(textCol), n).as("sh"))
-      .repartition(col("id"))
-      .filter(size(col("sh")) > 0)
-    val probeShingles = probes.select(
-        explode(graft.expressions.ShingleExpressions
-          .distinctWordNgrams(col(probeTextCol), n)).as("s"))
-    val postings = sets.select(col("id"), explode(col("sh")).as("s"))
-    val flagged = bloomMightContain(postings, "s", probeShingles, "s",
-        expectedProbeShingles, bitsPerItem)
-    val shared = postings
-      .filter(flagged)
-      .groupBy("id")
-      .agg(count(lit(1)).as("shared_shingles"))
-    sets.select(col("id"), size(col("sh")).as("n_shingles"))
-      .join(shared, Seq("id"), "left")
-      .select(col("id").as(idCol), col("n_shingles"),
-        coalesce(col("shared_shingles"), lit(0L)).as("shared_shingles"),
-        (coalesce(col("shared_shingles"), lit(0L)).cast("double") /
-          col("n_shingles")).as("contamination"))
-  }
-
-  /** Per-ROW form of [[ngramContaminationBloom]] — the STREAMING
+  /** Per-ROW bloom form of [[ngramContamination]] — the STREAMING
     * decontamination gate: no explode, no per-doc aggregation, no
     * join; each row counts its might-contain shingles inside one
     * higher-order `filter` against the plan-time bloom literal. A pure
@@ -985,9 +942,9 @@ object Dedup {
 
   /** Build a bloom over `right.rightKeyCol` and return the scan-local
     * might-contain predicate on `left.leftKeyCol` — the probe primitive
-    * [[bloomAntiJoin]] and [[ngramContaminationBloom]] share. Enforces
-    * the type-match and session-cap contracts (see bloomAntiJoin docs);
-    * an empty right side yields a constant-false predicate. */
+    * [[bloomAntiJoin]] and [[JoinPrune]] build on. Enforces the
+    * type-match and session-cap contracts (see bloomAntiJoin docs); an
+    * empty right side yields a constant-false predicate. */
   private[operators] def bloomMightContain(left: DataFrame, leftKeyCol: String,
       right: DataFrame, rightKeyCol: String,
       expectedItems: Long, bitsPerItem: Int): Column = {

@@ -188,7 +188,7 @@ object Pca {
     * [[graft.expressions.RandomProject]] (entry (i, j) =
     * `RandomProject.sign(i·d + j)`): no seed state, no broadcast,
     * every executor derives it from integer arithmetic alone. */
-  def rangeAggregator(d: Int, ell: Int): Aggregator[Seq[Double], RangeBuf, RangeBuf] =
+  private def rangeAggregator(d: Int, ell: Int): Aggregator[Seq[Double], RangeBuf, RangeBuf] =
     new Aggregator[Seq[Double], RangeBuf, RangeBuf] {
       override def zero: RangeBuf =
         RangeBuf(0L, new Array[Double](d), new Array[Double](d * ell))

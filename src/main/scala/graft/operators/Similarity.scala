@@ -143,23 +143,6 @@ object Similarity {
     Array.fill(numPlanes, dim)(if (rng.nextBoolean()) 1.0 else -1.0)
   }
 
-  /** Sign-bucket id of a vector under one table of `planes`: bit h =
-    * sign(v · plane_h). Packed to an int.
-    *
-    * Compositional REFERENCE implementation (a `when`-tree over
-    * `dotProduct` calls) kept for the equivalence spec; the production
-    * path is the one-pass codegen `HyperplaneBuckets` expression — a
-    * multi-table `when`-tree is a single unsplittable expression whose
-    * generated method overflows the JIT bytecode ceiling and runs
-    * interpreted (profiled ~0.5 ms/row at 32×3 planes). */
-  def lshBucket(vec: Column, planes: Array[Array[Double]]): Column = {
-    val bits = planes.map { p =>
-      val planeCol = array(p.map(lit): _*)
-      when(dotProduct(vec, planeCol) >= 0, 1).otherwise(0)
-    }
-    bits.reduceLeft((acc, b) => acc * 2 + b)
-  }
-
   /** (tbl, bkt, id) bucket rows for one side — arrays are NOT carried;
     * candidates travel as bare ids and vectors join back later. All
     * table buckets come from ONE `HyperplaneBuckets` pass (codegen'd

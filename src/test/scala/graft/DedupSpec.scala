@@ -764,31 +764,6 @@ class DedupSpec extends SparkSpec {
     }
   }
 
-  test("ngramContaminationBloom: one-sided vs exact, tight at high bits/item") {
-    val corpus = Tables.documents(spark, sf)
-    val probes = corpus.filter(col("doc_id") % 20 === 0)
-    val exact = Dedup.ngramContamination(corpus, "doc_id", "text",
-        probes, "text", n = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    val bloom = Dedup.ngramContaminationBloom(corpus, "doc_id", "text",
-        probes, "text", n = 3,
-        expectedProbeShingles = 20000, bitsPerItem = 16)
-      .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
-    assert(bloom.keySet === exact.keySet)
-    // no false negatives: bloom counts never under-report leakage
-    exact.foreach { case (id, n) =>
-      assert(bloom(id) >= n, s"doc $id: bloom ${bloom(id)} < exact $n")
-    }
-    // and at 16 bits/item (fpp ~0.05%) the over-report is a sliver:
-    // total overshoot bounded well under 1% of all corpus shingles
-    val overshoot = bloom.map { case (id, n) => n - exact(id) }.sum.toDouble
-    val totalShingles = Dedup.ngramContamination(corpus, "doc_id", "text",
-        probes, "text", n = 3)
-      .agg(sum(col("n_shingles"))).collect().head.getLong(0).toDouble
-    assert(overshoot / totalShingles < 0.01,
-      s"overshoot $overshoot over $totalShingles shingles")
-  }
-
   test("bloomAntiJoin keeps NULL keys and handles an empty right side") {
     val left = Seq((java.lang.Long.valueOf(1L), "a"),
       (null.asInstanceOf[java.lang.Long], "b")).toDF("id", "payload")

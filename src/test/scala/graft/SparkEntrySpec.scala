@@ -3,7 +3,8 @@ package graft
 class SparkEntrySpec extends SparkSpec {
 
   test("entry returns rows on sf0.001") {
-    assert(SparkEntry.entry(spark).count() > 0)
+    // collect(), not count(): count() lets Catalyst prune every column
+    assert(SparkEntry.entry(spark).collect().nonEmpty)
   }
 
   test("every oracle key has a query") {

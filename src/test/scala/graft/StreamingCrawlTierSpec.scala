@@ -207,179 +207,4 @@ class StreamingCrawlTierSpec extends SparkSpec {
     assert(batch.contains((4L, "https://h.com/m")))
     assert(batch.size === pages.size * 7) // 7 anchors per planted page
   }
-
-  test("streaming frontier ≡ Crawl.bfs per hop, across batches and a checkpoint restart") {
-    import graft.streaming.StreamingFrontier
-    // hand-checkable corpus: seeds {a,b}; a→{c,d}, b→{d,e}, c→{f,a},
-    // d→{g}, f→{h}, g→{h}; e and h have no pages (dangling discoveries)
-    def u(s: String) = s"http://s.example.com/$s"
-    def page(links: String*): String =
-      "<html><body>" +
-        links.map(l => s"""<a href="${u(l)}">x</a>""").mkString +
-        "</body></html>"
-    val corpus = Map(
-      "a" -> page("c", "d"), "b" -> page("d", "e"),
-      "c" -> page("f", "a"), "d" -> page("g"),
-      "f" -> page("h"), "g" -> page("h"))
-    val pagesDf = corpus.toSeq.map { case (k, h) => (u(k), h) }
-      .toDF("url", "html")
-    val seeds = Seq(u("a"), u("b")).toDF("url")
-    // the batch contract: first-reach hops over the same corpus
-    val bfs = graft.operators.Crawl
-      .bfs(pagesDf, "url", "html", seeds, "url", hops = 3)
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    def hop(k: Int): Set[String] =
-      bfs.collect { case (url, h) if h == k => url }.toSet
-    assert(hop(1) === Set(u("c"), u("d"), u("e")))
-    assert(hop(2) === Set(u("f"), u("g")))
-    assert(hop(3) === Set(u("h")))
-
-    val (in, out, cp) = (tmp("sf_in"), tmp("sf_out"), tmp("sf_cp"))
-    val pageSchema2 = StructType(Seq(
-      StructField("url", StringType), StructField("html", StringType)))
-    var landed = 0
-    def land(names: Seq[String]): Unit = {
-      landed += 1
-      val staging = Files.createTempDirectory("sf_stage").toString
-      names.map(k => (u(k), corpus(k))).toDF("url", "html")
-        .coalesce(1).write.mode("overwrite").json(staging)
-      val part = new java.io.File(staging).listFiles()
-        .filter(_.getName.endsWith(".json")).head
-      val target = in.resolve(f"cap_$landed%04d.json")
-      Files.move(part.toPath, target)
-      Files.setLastModifiedTime(target,
-        java.nio.file.attribute.FileTime.fromMillis(
-          1700000000000L + landed * 10000L))
-    }
-    def runOnceF(): Unit = {
-      val stream = spark.readStream.schema(pageSchema2)
-        .option("maxFilesPerTrigger", "1").json(in.toString)
-      val q = StreamingFrontier.frontierDeltas(stream, "url", "html")
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", cp.toString)
-        .outputMode(OutputMode.Append())
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    def sinkUrls(): Set[String] =
-      spark.read.parquet(out.toString).collect()
-        .map(_.getString(0)).toSet
-
-    // hop-by-hop: land the fetched frontier, read the emitted delta
-    land(Seq("a", "b")) // the seeds are batch-one captures
-    runOnceF()
-    val d1 = sinkUrls()
-    assert(d1 === hop(1), "delta after seeds must be the hop-1 frontier")
-    land(Seq("c", "d")) // e has no page: discovered, never fetchable
-    runOnceF()
-    val d2 = sinkUrls() -- d1
-    assert(d2 === hop(2))
-    // checkpoint restart BEFORE the last hop: the seen registry must
-    // survive — a restart that forgot it would re-emit c/d/e/f/g here
-    land(Seq("f", "g"))
-    runOnceF()
-    val d3 = sinkUrls() -- d1 -- d2
-    assert(d3 === hop(3))
-    // convergence: the accumulated deltas are exactly bfs's discovered
-    // set minus the hop-0 seeds; re-landing a page emits nothing new
-    assert(sinkUrls() === bfs.keySet -- Set(u("a"), u("b")))
-    land(Seq("a"))
-    runOnceF()
-    assert(sinkUrls() === bfs.keySet -- Set(u("a"), u("b")))
-  }
-
-  test("streaming frontier × politeness: per-wave schedule ≡ batch pricing per hop, across a restart") {
-    import graft.streaming.StreamingFrontier
-    import org.apache.spark.sql.expressions.Window
-    // three hosts: fast declares 0.5 s (the * group), slow 2 s (the
-    // graftbot group), nd declares nothing → the 1 s default
-    def uf(s: String) = s"http://fast.example.com/$s"
-    def us(s: String) = s"http://slow.example.com/$s"
-    def un(s: String) = s"http://nd.example.com/$s"
-    val delays = graft.functions.UrlOps.robotsCrawlDelays(
-      Seq(
-        ("fast.example.com", "User-agent: *\nCrawl-delay: 0.5"),
-        ("slow.example.com", "User-agent: graftbot\nCrawl-delay: 2"))
-        .toDF("host", "text"),
-      "host", "text", "graftbot")
-    def page(links: String*): String =
-      "<html><body>" +
-        links.map(l => s"""<a href="$l">x</a>""").mkString +
-        "</body></html>"
-    // seeds a@fast, b@slow; hop-1 = {c@fast, f@fast, d@slow, e@nd};
-    // hop-2 = {g@fast, i@fast, h@slow} (g linked twice — emits once)
-    val corpus = Map(
-      uf("a") -> page(uf("c"), us("d"), un("e")),
-      us("b") -> page(us("d"), uf("f")),
-      uf("c") -> page(uf("g")),
-      us("d") -> page(us("h"), uf("i")),
-      uf("f") -> page(uf("g")))
-    // the batch pricing contract, applied to ONE hop's frontier: per
-    // host, (sha52(url) rank − 1) × delay — the q_fetch_schedule rule
-    // on the url identity
-    def priceHop(urls: Set[String]): Set[(String, String, Long)] = {
-      val w = Window.partitionBy("host")
-        .orderBy(graft.functions.Kmv.sha52(col("url")), col("url"))
-      urls.toSeq.toDF("url")
-        .withColumn("host", graft.functions.UrlOps.hostNoPort(col("url")))
-        .join(broadcast(delays), Seq("host"), "left")
-        .withColumn("__r", row_number().over(w))
-        .select(col("url"), col("host"),
-          ((col("__r") - 1) * coalesce(col("crawl_delay_s"), lit(1.0))
-            * 1000).cast("long").as("fetch_offset_ms"))
-        .collect().map(r => (r.getString(0), r.getString(1),
-          r.getLong(2))).toSet
-    }
-    val hop1 = Set(uf("c"), uf("f"), us("d"), un("e"))
-    val hop2 = Set(uf("g"), uf("i"), us("h"))
-
-    val (in, out, cp) = (tmp("sp_in"), tmp("sp_out"), tmp("sp_cp"))
-    val pageSchema2 = StructType(Seq(
-      StructField("url", StringType), StructField("html", StringType)))
-    var landed = 0
-    def land(urls: Seq[String]): Unit = {
-      landed += 1
-      val staging = Files.createTempDirectory("sp_stage").toString
-      urls.map(k => (k, corpus(k))).toDF("url", "html")
-        .coalesce(1).write.mode("overwrite").json(staging)
-      val part = new java.io.File(staging).listFiles()
-        .filter(_.getName.endsWith(".json")).head
-      Files.move(part.toPath, in.resolve(f"cap_$landed%04d.json"))
-    }
-    def runOnceS(): Unit = {
-      val stream = spark.readStream.schema(pageSchema2)
-        .option("maxFilesPerTrigger", "1").json(in.toString)
-      val q = StreamingFrontier
-        .scheduledDeltas(stream, "url", "html", delays)
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", cp.toString)
-        .outputMode(OutputMode.Append())
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    def waves(): Set[(String, String, Long)] =
-      spark.read.parquet(out.toString).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-
-    land(Seq(uf("a"), us("b"))) // the seed wave
-    runOnceS()
-    val w1 = waves()
-    assert(w1 === priceHop(hop1),
-      "wave 1 must be the batch-priced hop-1 schedule")
-    // offsets are really politeness-priced: the two fast-host urls sit
-    // 500 ms apart, the single urls of slow/nd start at 0
-    assert(w1.filter(_._2 == "fast.example.com").map(_._3) === Set(0L, 500L))
-    assert(w1.filter(_._2 == "slow.example.com").map(_._3) === Set(0L))
-    // checkpoint restart between waves: the seen registry survives, so
-    // wave 2 prices ONLY the new discoveries (g once despite 2 links)
-    land(Seq(uf("c"), us("d"), uf("f")))
-    runOnceS()
-    assert(waves() -- w1 === priceHop(hop2))
-    // re-landing fetched pages discovers nothing: no third wave
-    land(Seq(uf("a"), uf("c")))
-    runOnceS()
-    assert(waves() -- w1 === priceHop(hop2))
-  }
 }

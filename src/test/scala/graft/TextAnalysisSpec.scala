@@ -1,11 +1,75 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextAnalysis
 
 class TextAnalysisSpec extends SparkSpec {
   import spark.implicits._
+
+  private def markerHits(text: Column, markers: Seq[String]): Column =
+    size(filter(TextAnalysis.tokens(text), t => t.isInCollection(markers)))
+
+  /** Column-only reference implementation of [[TextAnalysis.langId]],
+    * the parity reference for the custom expression. */
+  private def langIdColumns(text: Column): Column = {
+    import TextAnalysis.langMarkers
+    val scores = langMarkers.map { case (lang, ms) => lang -> markerHits(text, ms) }
+    val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
+    val cases = scores.foldLeft(when(best === 0, lit("und"))) {
+      case (acc, (lang, s)) => acc.when(s === best, lit(lang))
+    }
+    when(text.isNull, lit(null).cast("string"))
+      .otherwise(cases.otherwise(lit("und")))
+  }
+
+  /** The Column-built-ins reference formulation of
+    * [[TextAnalysis.gopherRules]] — semantically identical, the parity
+    * reference (the LangId / TextStats discipline: every custom
+    * expression is pinned against a compositional reference). Slower by
+    * design: the interpreted HOF subtrees (tokenize ×4, line split ×2)
+    * clone into every feature. */
+  private def gopherRulesColumns(text: Column,
+      minWords: Long = 50L, maxWords: Long = 100000L,
+      minMeanLen: Double = 3.0, maxMeanLen: Double = 10.0,
+      maxSymbolRatio: Double = 0.1, maxBulletFrac: Double = 0.9,
+      maxEllipsisFrac: Double = 0.3, minAlphaFrac: Double = 0.8,
+      minStopHits: Int = 2): Column = {
+    import TextAnalysis.{gopherStops, tokens}
+    val toks = tokens(text)
+    val nWords = when(length(trim(text)) === 0, lit(0L))
+      .otherwise(size(toks).cast("long"))
+    val lenSum = aggregate(toks, lit(0L), (acc, t) => acc + length(t))
+    val meanLen = when(nWords === 0, lit(0.0))
+      .otherwise(lenSum.cast("double") / nWords)
+    // the paper's "symbol" set: hash marks and ellipses ("..." or '…')
+    val symbols = (regexp_count(text, lit("#")) +
+      regexp_count(text, lit("(\\.\\.\\.|…)"))).cast("long")
+    val symbolRatio = when(nWords === 0, lit(0.0))
+      .otherwise(symbols.cast("double") / nWords)
+    val lines = split(text, "\n")
+    val nLines = size(lines).cast("long")
+    val bulletFrac = size(filter(lines, l => l.rlike("^\\s*[-*•]")))
+      .cast("double") / nLines
+    val ellipsisFrac = size(filter(lines, l => l.rlike("(\\.\\.\\.|…)\\s*$")))
+      .cast("double") / nLines
+    val alphaWords = size(filter(toks, t => t.rlike("[A-Za-z]"))).cast("long")
+    val alphaFrac = when(nWords === 0, lit(0.0))
+      .otherwise(alphaWords.cast("double") / nWords)
+    val stopHits = size(array_intersect(
+      array(gopherStops.map(lit): _*), toks)).cast("long")
+    val pass = nWords >= minWords && nWords <= maxWords &&
+      meanLen >= minMeanLen && meanLen <= maxMeanLen &&
+      symbolRatio <= maxSymbolRatio && bulletFrac <= maxBulletFrac &&
+      ellipsisFrac <= maxEllipsisFrac && alphaFrac >= minAlphaFrac &&
+      stopHits >= minStopHits
+    struct(
+      nWords.as("n_words"), meanLen.as("mean_word_len"),
+      symbolRatio.as("symbol_ratio"), bulletFrac.as("bullet_line_frac"),
+      ellipsisFrac.as("ellipsis_line_frac"), alphaFrac.as("alpha_word_frac"),
+      stopHits.as("stop_hits"), pass.as("pass"))
+  }
 
   private def one(c: org.apache.spark.sql.Column, text: String) =
     Seq(text).toDF("t").select(c.as("v")).collect().head
@@ -42,13 +106,13 @@ class TextAnalysisSpec extends SparkSpec {
   test("single-pass langId expression matches the Column reference impl") {
     val mismatches = Tables.documents(spark, sf)
       .select(TextAnalysis.langId(col("text")).as("fast"),
-        TextAnalysis.langIdColumns(col("text")).as("ref"))
+        langIdColumns(col("text")).as("ref"))
       .filter(col("fast") =!= col("ref"))
     assert(mismatches.count() === 0)
     // overlap ("la" scores both es and fr) + tie-break order + null
     val edge = Seq("la la la", null.asInstanceOf[String]).toDF("t")
       .select(TextAnalysis.langId(col("t")).as("fast"),
-        TextAnalysis.langIdColumns(col("t")).as("ref"))
+        langIdColumns(col("t")).as("ref"))
       .collect()
     edge.foreach(r => assert(r.getString(0) === r.getString(1)))
   }
@@ -647,7 +711,7 @@ class TextAnalysisSpec extends SparkSpec {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val both = df.select(col("id"),
         TextAnalysis.gopherRules(col("text")).as("e"),
-        TextAnalysis.gopherRulesColumns(col("text")).as("c"))
+        gopherRulesColumns(col("text")).as("c"))
       .collect()
     both.foreach { r =>
       assert(r.getStruct(1) === r.getStruct(2),

@@ -642,7 +642,7 @@ class WarcSpec extends SparkSpec {
         lit("application/octet-stream").as("content_type"),
         encode(repeat(concat(col("id").cast("string"), lit("-abcdefgh")),
           10000), "UTF-8").as("payload"))
-    val files = Warc.writeWarcFiles(df, dir)
+    val files = WarcWriter.writeWarcFiles(df, dir)
     assert(files === 8L)
     val back = Warc.readWarcFiles(spark, dir)
     // bad rows, counts, and byte-exactness in ONE distributed compare:
@@ -674,7 +674,7 @@ class WarcSpec extends SparkSpec {
     import spark.implicits._
     val frame = spark.createDataFrame(
       spark.sparkContext.parallelize(parsed, 1))
-    assert(Warc.writeWarcFiles(frame, dir) === 1L)
+    assert(WarcWriter.writeWarcFiles(frame, dir) === 1L)
     val back = Warc.readWarcFiles(spark, dir).collect()
     // the quarantined leading-garbage row was skipped, the record
     // round-trips byte-exactly with its custom header and version
@@ -697,7 +697,7 @@ class WarcSpec extends SparkSpec {
         lit("2026-08-17T00:00:00Z").as("warc_date"),
         lit("application/octet-stream").as("content_type"),
         encode(col("id").cast("string"), "UTF-8").as("payload"))
-    val man = Warc.writeWarcFilesManifest(good, dir)
+    val man = WarcWriter.writeWarcFilesManifest(good, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getString(3)))
     assert(man.length === 4)
@@ -736,7 +736,7 @@ class WarcSpec extends SparkSpec {
         lit("application/octet-stream").as("content_type"),
         boom(col("id")).as("payload"))
     intercept[org.apache.spark.SparkException](
-      Warc.writeWarcFilesManifest(bad, dir2))
+      WarcWriter.writeWarcFilesManifest(bad, dir2))
     val visible = Option(new java.io.File(dir2).listFiles).toSeq.flatten
       .filter(_.getName.endsWith(".warc.gz"))
     assert(visible.size < 2, "poisoned partition must not commit a file")
