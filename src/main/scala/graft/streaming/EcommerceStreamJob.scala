@@ -3,9 +3,11 @@ package graft.streaming
 import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DateType, IntegerType, StringType}
 
 import graft.ingest.Json
 import graft.operators.Ecommerce
@@ -15,13 +17,17 @@ import graft.sinks.JdbcUpsert.ConnConfig
 /** The end-to-end streaming job: the Spark-native counterpart of the
   * reference's single Flink dataflow (`DataStreamJob.java:84-170`).
   *
-  * Topology decision (vs SURVEY.md §3's "single read + foreachBatch
-  * fan-out" sketch): the three aggregations are RUNNING totals — state
-  * since job start — so they must live in Structured Streaming state
-  * stores (`groupBy().agg()` + `outputMode("update")`), and Spark allows
-  * one streaming aggregation per query. We therefore run FOUR queries
-  * over the same topic (raw copy + three aggs), each with its own
-  * checkpoint. This preserves the two properties the reference relies on:
+  * Topology: TWO queries over the same topic, each with its own
+  * checkpoint — the raw copy (append) and `running_sums` (update). The
+  * three aggregations are RUNNING totals — state since job start — so
+  * they must live in Structured Streaming state stores
+  * (`groupBy().agg()` + `outputMode("update")`), and Spark allows one
+  * streaming aggregation per query. The three keyings share that one
+  * aggregation: `runningSums` turns each event into three rows tagged
+  * with their sum's kind, so one shuffle and one state store per
+  * trigger hold all three totals, and the query's `foreachBatch` hands
+  * each table its slice of the batch (persisted once, read three
+  * times). This preserves the two properties the reference relies on:
   *   - convergence: update-mode emits the full running total for every
   *     changed key each micro-batch, so the `ON CONFLICT … SET total_sales
   *     = EXCLUDED.total_sales` replace-upsert converges to the same DB
@@ -51,7 +57,7 @@ object EcommerceStreamJob {
     * values with small restarted ones.
     *
     * `groupId` empty ⇒ let Spark generate a UNIQUE consumer group per
-    * query. The four concurrent queries of this job must NOT share one
+    * query. The two concurrent queries of this job must NOT share one
     * group id — the Spark Kafka integration warns that concurrent
     * queries in the same group interfere and each read only part of the
     * topic. Set it only for broker-side ACL requirements, and then run
@@ -123,6 +129,37 @@ object EcommerceStreamJob {
   def monthAgg(tx: DataFrame): DataFrame =
     Ecommerce.salesPerMonthFaithful(tx, "transactionDate", "totalAmount")
 
+  /** The three running sums in one aggregation. Each event becomes three
+    * rows, one per sum: its `kind` (`category`, `day` or `month`), that
+    * kind's key with the other kinds' keys null, the event's date and
+    * year, and its amount. One `groupBy(kind, category, day, month)` then
+    * keeps every total of `categoryAgg`, `dayAgg` and `monthAgg` (with the
+    * same first-seen date and year) in one state store, behind one
+    * shuffle; `pipelines` holds each table's slice of the output. The
+    * three structs carry identical field names, or `array` rejects them
+    * as different types. */
+  def runningSums(tx: DataFrame): DataFrame = {
+    val ts = col("transactionDate")
+    def tagged(kind: String, category: Column, day: Column, month: Column): Column =
+      struct(lit(kind).as("kind"), category.as("category"), day.as("day"),
+        month.as("month"), to_date(ts).as("date"), year(ts).as("year"),
+        col("totalAmount").as("amount"))
+    val noCategory = lit(null).cast(StringType)
+    val noDay = lit(null).cast(DateType)
+    val noMonth = lit(null).cast(IntegerType)
+    tx.select(inline(array(
+        tagged("category", col("productCategory"), noDay, noMonth),
+        tagged("day", noCategory, to_date(ts), noMonth),
+        tagged("month", noCategory, noDay, month(ts)))))
+      .groupBy("kind", "category", "day", "month")
+      .agg(first("date").as("transaction_date"), first("year").as("year"),
+        sum("amount").as("total_sales"))
+  }
+
+  /** One kind's rows of `runningSums`, projected to its table's columns. */
+  private def slice(kind: String, columns: Column*): DataFrame => DataFrame =
+    _.filter(col("kind") === kind).select(columns: _*)
+
   /** Raw transactions projected to the DB column names
     * (`DataStreamJob.java:318-331`). */
   def rawForDb(tx: DataFrame): DataFrame =
@@ -142,37 +179,72 @@ object EcommerceStreamJob {
 
   // ---- wiring ----
 
-  /** The four pipelines of the job as (queryName, transform, outputMode,
-    * targetTable, upsertKeys) — the single topology description both
-    * `startAll` (JDBC) and tests (captured sinks) wire up.
+  /** The two queries of the job as (queryName, transform, outputMode,
+    * tables), each table as (name, upsertKeys, slice of the query's
+    * output) — the single topology description both `startAll` (JDBC)
+    * and tests (captured sinks) wire up. Each table gets the columns
+    * that `rawForDb`, `categoryAgg`, `dayAgg` or `monthAgg` gives it.
     * Conflict targets = the table PKs (`DataStreamJob.java:280,293,307`);
     * the faithful aggs pin date/year per key, so the full-PK conflict
     * target hits the same row every update. */
-  val pipelines: Seq[(String, DataFrame => DataFrame, String, String, Seq[String])] = Seq(
-    ("raw_transactions", rawForDb _, "append", "transactions", Seq("transaction_id")),
-    ("sales_per_category", categoryAgg _, "update", "sales_per_category",
-      Seq("transaction_date", "category")),
-    ("sales_per_day", dayAgg _, "update", "sales_per_day", Seq("transaction_date")),
-    ("sales_per_month", monthAgg _, "update", "sales_per_month", Seq("year", "month"))
+  val pipelines: Seq[(String, DataFrame => DataFrame, String,
+      Seq[(String, Seq[String], DataFrame => DataFrame)])] = Seq(
+    ("raw_transactions", rawForDb _, "append",
+      Seq(("transactions", Seq("transaction_id"), identity[DataFrame] _))),
+    ("running_sums", runningSums _, "update", Seq(
+      ("sales_per_category", Seq("transaction_date", "category"),
+        slice("category", col("transaction_date"), col("category"), col("total_sales"))),
+      ("sales_per_day", Seq("transaction_date"),
+        slice("day", col("day").as("transaction_date"), col("total_sales"))),
+      ("sales_per_month", Seq("year", "month"),
+        slice("month", col("year"), col("month"), col("total_sales")))))
   )
 
+  /** Refuse a checkpoint root written by the retired one-query-per-sum
+    * layout: `running_sums` would start its totals from zero there, and
+    * its replace-upserts would then overwrite the database's totals. */
+  private def requireCurrentLayout(spark: SparkSession, root: String): Unit = {
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def exists(name: String): Boolean = fs.exists(new Path(rootPath, name))
+    val retired = Seq("sales_per_category", "sales_per_day", "sales_per_month").filter(exists)
+    if (retired.nonEmpty && !exists("running_sums"))
+      throw new IllegalStateException(
+        s"checkpoint root $root holds the retired per-sum checkpoints " +
+          s"${retired.mkString(", ")} but no running_sums: starting here would " +
+          "restart the running sums from zero and overwrite the database's totals")
+  }
+
   /** Start the full topology with a custom per-batch sink — the test
-    * seam. `sink(table, keys)(batchDf, batchId)` is invoked per
-    * micro-batch of each pipeline. All or nothing: if any `start()`
-    * throws, the queries already started are stopped before the error
-    * propagates, so a failed start leaves no query running. */
+    * seam. `sink(table, keys)(batchDf, batchId)` is invoked once per
+    * micro-batch of each table, with that table's slice of its query's
+    * batch; a batch that feeds several tables is persisted for the
+    * duration of its writes, so the query runs once per trigger. All or
+    * nothing: if any `start()` throws, the queries already started are
+    * stopped before the error propagates, so a failed start leaves no
+    * query running. */
   def startAllWithSink(spark: SparkSession, cfg: JobConfig, source: DataFrame)(
       sink: (String, Seq[String]) => (DataFrame, Long) => Unit): Seq[StreamingQuery] = {
+    requireCurrentLayout(spark, cfg.checkpointRoot)
     val tx = parse(source)
     val started = ArrayBuffer.empty[StreamingQuery]
     try {
-      pipelines.foreach { case (name, transform, mode, table, keys) =>
+      pipelines.foreach { case (name, transform, mode, tables) =>
+        val write: (DataFrame, Long) => Unit = tables match {
+          case Seq((table, keys, project)) =>
+            (batch, batchId) => sink(table, keys)(project(batch), batchId)
+          case _ => (batch, batchId) =>
+            batch.persist()
+            try tables.foreach { case (table, keys, project) =>
+              sink(table, keys)(project(batch), batchId)
+            } finally batch.unpersist()
+        }
         started += transform(tx).writeStream
           .queryName(name)
           .outputMode(mode)
           .option("checkpointLocation", s"${cfg.checkpointRoot}/$name")
           .trigger(Trigger.ProcessingTime(cfg.triggerMs))
-          .foreachBatch(sink(table, keys))
+          .foreachBatch(write)
           .start()
       }
       started.toSeq
@@ -186,8 +258,8 @@ object EcommerceStreamJob {
   }
 
   /** Start the full job: DDL once at startup (replacing the reference's
-    * no-op DDL "sinks" W1–W4), then four streaming queries upserting
-    * into Postgres. */
+    * no-op DDL "sinks" W1–W4), then two streaming queries upserting
+    * into Postgres's four tables. */
   def startAll(spark: SparkSession, cfg: JobConfig,
       source: Option[DataFrame] = None): Seq[StreamingQuery] = {
     JdbcUpsert.runDdl(cfg.db)

@@ -9,9 +9,9 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.EcommerceStreamJob
 import graft.streaming.EcommerceStreamJob.JobConfig
 
-/** Multi-query concurrency over ONE shared source: all four pipelines
-  * of the job read the same `MemoryStream` simultaneously (the exact
-  * topology the Kafka deployment runs — four consumers of one topic),
+/** Multi-query concurrency over ONE shared source: both pipelines of
+  * the job read the same `MemoryStream` simultaneously (the exact
+  * topology the Kafka deployment runs — two consumers of one topic),
   * with data arriving in interleaved rounds while the queries are
   * already live. What this pins down beyond EndToEndStreamSpec's
   * file-source run:
@@ -32,7 +32,7 @@ class ConcurrentStreamSpec extends SparkSpec {
        |"customerId":"c1","transactionDate":"$ts",
        |"paymentMethod":"credit_card"}""".stripMargin.replaceAll("\n", "")
 
-  test("four concurrent queries over one MemoryStream all see every round") {
+  test("the concurrent queries over one MemoryStream all see every round") {
     implicit val sql = spark.sqlContext
     val input = MemoryStream[String]
     val ckpt = Files.createTempDirectory("graft-conc-ckpt")

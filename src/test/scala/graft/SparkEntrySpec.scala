@@ -12,27 +12,18 @@ class SparkEntrySpec extends SparkSpec {
     assert(missing.isEmpty, s"oracleSql without queries: $missing")
   }
 
-  // one build per query, shared by the two tests below: the alias check
-  // reads the built frame's columns, and collect() (not count()) exhausts
-  // every output column, so Catalyst cannot prune a column under test
-  private lazy val built: Seq[(String, Array[String], Boolean)] =
-    SparkEntry.queries.toSeq.map { case (name, fn) =>
-      val df = fn(spark, sf)
-      (name, df.columns, df.collect().nonEmpty)
-    }
-
   test("every query runs and returns rows on sf0.001") {
-    built.foreach { case (name, _, nonEmpty) =>
-      assert(nonEmpty, s"query $name returned 0 rows")
+    CatalogBuilds.all(spark, sf).foreach { b =>
+      assert(b.nonEmpty, s"query ${b.name} returned 0 rows")
     }
   }
 
   test("query column names match oracle aliases (sorted-column hash contract)") {
     // no unaliased aggregate names like sum(value): the oracle compare
     // hashes sorted columns by name
-    built.foreach { case (name, cols, _) =>
-      cols.foreach { c =>
-        assert(!c.contains("("), s"$name column '$c' looks unaliased")
+    CatalogBuilds.all(spark, sf).foreach { b =>
+      b.columns.foreach { c =>
+        assert(!c.contains("("), s"${b.name} column '$c' looks unaliased")
       }
     }
   }

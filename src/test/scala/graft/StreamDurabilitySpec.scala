@@ -20,7 +20,7 @@ import graft.streaming.EcommerceStreamJob.JobConfig
   * line with events/s and the recovery time, recorded in BASELINE.md.
   *
   * Mid-run means mid-stream, not between-phases: the stop fires as
-  * soon as ANY pipeline has committed a first main batch, so the four
+  * soon as ANY pipeline has committed a first main batch, so the two
   * pipelines are interrupted at different offsets and the restart
   * exercises per-query offset recovery, state reload, and replay of
   * possibly-half-applied foreachBatch upserts (idempotent by key, so

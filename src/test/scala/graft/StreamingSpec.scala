@@ -152,12 +152,36 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Files.write(dir.resolve("part-0.jsonl"),
         java.util.List.of(jsonTx("t1", "electronic", 1.0, "2024-11-08T10:00:00.000000")))
       val raw = spark.read.text(dir.toString)
-      EcommerceStreamJob.pipelines.foreach { case (name, transform, _, _, _) =>
+      EcommerceStreamJob.pipelines.foreach { case (name, transform, _, _) =>
         val plan = transform(EcommerceStreamJob.parse(raw)).queryExecution.optimizedPlan
         val parses = plan.flatMap(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
         assert(parses.size === 1, s"$name parses ${parses.size} times:\n$plan")
       }
     } finally StreamEventFixture.deleteRecursively(dir)
+  }
+
+  test("running_sums slices equal the three aggregations they replace") {
+    // one date per category and one year per month: first() then has a
+    // single candidate per key, so batch results are deterministic
+    val tx = EcommerceStreamJob.parse(Seq(
+      jsonTx("t1", "electronic", 10.0, "2024-11-08T10:00:00.000000"),
+      jsonTx("t2", "fashion", 4.0, "2024-11-09T11:00:00.000000"),
+      jsonTx("t3", "electronic", 2.5, "2024-11-08T12:00:00.000000"),
+      jsonTx("t4", "grocery", 6.0, "2024-12-01T08:00:00.000000"),
+      jsonTx("t5", "toy", 1.5, "2024-11-09T09:00:00.000000")).toDF("value"))
+    val Seq(_, (_, sums, _, tables)) = EcommerceStreamJob.pipelines
+    val out = sums(tx)
+    val expected = Map(
+      "sales_per_category" -> EcommerceStreamJob.categoryAgg(tx),
+      "sales_per_day" -> EcommerceStreamJob.dayAgg(tx),
+      "sales_per_month" -> EcommerceStreamJob.monthAgg(tx))
+    assert(tables.map(_._1).toSet === expected.keySet)
+    tables.foreach { case (table, _, project) =>
+      val got = project(out)
+      assert(got.schema.map(f => f.name -> f.dataType) ===
+        expected(table).schema.map(f => f.name -> f.dataType), table)
+      assert(got.collect().toSet === expected(table).collect().toSet, table)
+    }
   }
 
   private def Json_fixture() = {
