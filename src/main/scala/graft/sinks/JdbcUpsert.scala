@@ -119,98 +119,6 @@ object JdbcUpsert {
       }
     }
 
-  // ----- effectively-exactly-once epoch ledger -----
-
-  /** The epoch ledger: one row per (query, epoch, partition) applied.
-    * The reference's sink is at-least-once + idempotent upserts
-    * (`DataStreamJob.java:100-104`) — replays converge because every
-    * write is a keyed REPLACE. An ADDITIVE sink (plain INSERT, counters
-    * via `value = value + EXCLUDED.value`, append-only fact tables) has
-    * no such convergence: a replayed micro-batch doubles its rows. The
-    * ledger closes that gap. */
-  val ledgerTable = "graft_epoch_ledger"
-  val ledgerDdl: String =
-    s"""CREATE TABLE IF NOT EXISTS $ledgerTable (
-       query_id VARCHAR(255), epoch_id BIGINT, partition_id INTEGER,
-       PRIMARY KEY (query_id, epoch_id, partition_id))"""
-      .stripMargin.replaceAll("\\s+", " ").trim
-  val ledgerInsertSql: String =
-    s"INSERT INTO $ledgerTable (query_id, epoch_id, partition_id) " +
-      "VALUES (?, ?, ?) " +
-      "ON CONFLICT (query_id, epoch_id, partition_id) DO NOTHING"
-
-  /** Keyless additive insert text — the non-idempotent shape the epoch
-    * ledger exists for. */
-  def appendSql(table: String, columns: Seq[String]): String =
-    s"INSERT INTO $table (${columns.mkString(", ")}) VALUES " +
-      s"(${columns.map(_ => "?").mkString(", ")})"
-
-  /** Effectively-exactly-once ADDITIVE write: append every row of `df`
-    * to `table`, applying each (query, epoch, partition) at most once
-    * across any number of replays.
-    *
-    * Per partition, ONE transaction: claim the ledger row
-    * (`ON CONFLICT DO NOTHING`, `executeUpdate` → 0 means this
-    * partition's slice of this epoch already committed — skip), then
-    * stage every row batch, then commit — ledger claim and data rows
-    * become visible ATOMICALLY, so a crash at any point leaves either
-    * nothing (retry re-applies) or everything (retry skips). Unlike
-    * [[upsert]], there is NO in-task retry: the transaction spans the
-    * partition, so the retry unit is the Spark task (rollback + throw;
-    * the re-executed task gets a fresh iterator and the ledger decides
-    * afresh). Batches still bound memory — `executeBatch` per group,
-    * one `commit` at the end.
-    *
-    * Exactly-once granularity is per PARTITION: it requires the
-    * epoch's partitioning to be deterministic across replays (true for
-    * a deterministic foreachBatch pipeline replayed from checkpointed
-    * offsets on the same topology). Where topology can change between
-    * retries, `df.repartition(n, stableKeyCols)` pins the layout, or
-    * `coalesce(1)` buys unconditional exactly-once for small deltas.
-    * Call [[runDdl]] with [[ledgerDdl]] once at startup. */
-  def appendExactlyOnce(df: DataFrame, table: String, cfg: ConnConfig,
-      queryId: String, epochId: Long): Unit = {
-    val schema = df.schema
-    val sql = appendSql(table, schema.fieldNames.toSeq)
-    df.foreachPartition { rows: Iterator[Row] =>
-      if (rows.hasNext) {
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        var conn: Connection = null
-        try {
-          conn = connect(cfg)
-          conn.setAutoCommit(false)
-          val lg = conn.prepareStatement(ledgerInsertSql)
-          val claimed = try {
-            lg.setString(1, queryId); lg.setLong(2, epochId); lg.setInt(3, pid)
-            lg.executeUpdate()
-          } finally lg.close()
-          if (claimed == 1) {
-            val ps = conn.prepareStatement(sql)
-            try rows.grouped(cfg.batchSize).foreach { group =>
-              group.foreach { row => bind(ps, row, schema); ps.addBatch() }
-              ps.executeBatch()
-            } finally ps.close()
-          }
-          conn.commit()
-        } catch {
-          case e: Throwable =>
-            if (conn != null) { try conn.rollback() catch { case _: Throwable => () } }
-            throw e
-        } finally {
-          if (conn != null) { try conn.close() catch { case _: Throwable => () } }
-        }
-      }
-    }
-  }
-
-  /** [[appendExactlyOnce]] in `foreachBatch` shape:
-    * `stream.writeStream.foreachBatch(JdbcUpsert.foreachBatchAppend(
-    * "t", cfg, "orders-agg")) …` — epoch_id is the batchId Structured
-    * Streaming replays stably from the checkpoint. */
-  def foreachBatchAppend(table: String, cfg: ConnConfig,
-      queryId: String): (DataFrame, Long) => Unit =
-    (df, epochId) => appendExactlyOnce(df, table, cfg, queryId, epochId)
-
   /** Upsert every row of `df` into `table`. Column order follows the
     * DataFrame schema; DataFrame column names must equal DB column names.
     *

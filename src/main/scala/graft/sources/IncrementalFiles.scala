@@ -19,8 +19,7 @@ import org.apache.spark.sql.functions._
   *   3. [[readNewParquet]] — read exactly the new files and return
   *      their manifest rows for the caller to commit ATOMICALLY with
   *      its outputs (committing the manifest after a failed write, or
-  *      vice versa, is the classic double-/zero-processing bug — the
-  *      epoch-ledger lesson from `JdbcUpsert.appendExactlyOnce`).
+  *      vice versa, is the classic double-/zero-processing bug).
   *
   * The listing itself is driver-side and file-count-sized (the same
   * budget every Spark file source pays at planning time); paths of new

@@ -48,7 +48,9 @@ object EcommerceStreamJob {
   /** Config surface mirroring the reference's parameters
     * (`DataStreamJob.java:71-78`: kafka servers, topic, group, db url/user/
     * password — note the reference swaps user/password keys at `:108-109`;
-    * we do not reproduce that bug).
+    * we do not reproduce that bug). The server and database defaults
+    * are the reference's (`DataStreamJob.java:70-73,90`), and
+    * `JobParameters` falls back to them.
     *
     * `checkpointRoot` is deliberately required (no default): the
     * running totals live in the checkpointed state store, and a
@@ -69,7 +71,7 @@ object EcommerceStreamJob {
       groupId: String = "",
       startingOffsets: String = "latest",
       triggerMs: Long = 200L, // reference JDBC flush cadence (DataStreamJob.java:102)
-      db: ConnConfig = ConnConfig("jdbc:postgresql://localhost:5432/postgres",
+      db: ConnConfig = ConnConfig("jdbc:postgresql://postgres:5432/postgres",
         "postgres", "postgres"))
 
   /** The exact reader options `kafkaSource` passes to the connector —

@@ -5,14 +5,12 @@ import java.util.Properties
 
 import scala.jdk.CollectionConverters._
 
-import graft.sinks.JdbcUpsert.ConnConfig
-
 /** C1: args/properties → [[EcommerceStreamJob.JobConfig]], mirroring the
   * reference's parameter resolution (`DataStreamJob.java:339-355` +
   * `ParameterToolUtils.java:10-14`): a local run parses CLI args
   * (`ParameterTool.fromArgs` semantics), a managed run reads a
-  * properties bag; keys and defaults are the reference's
-  * (`DataStreamJob.java:70-78`).
+  * properties bag; keys are the reference's (`DataStreamJob.java:75-78`),
+  * and every default comes from [[EcommerceStreamJob.JobConfig]].
   *
   * One deliberate difference, documented rather than reproduced: the
   * reference swaps the user/password KEYS when building its JDBC options
@@ -34,12 +32,6 @@ object JobParameters {
   val GroupIdKey = "groupId"
   val StartingOffsetsKey = "startingOffsets"
   val TriggerMsKey = "triggerMs"
-
-  // reference defaults (DataStreamJob.java:70-73,90)
-  val JdbcUrlDefault = "jdbc:postgresql://postgres:5432/postgres"
-  val DatabaseUserDefault = "postgres"
-  val DatabasePasswordDefault = "postgres"
-  val KafkaServersDefault = "broker:29092"
 
   /** `ParameterTool.fromArgs`-style CLI parsing: `--key value` or
     * `-key value` pairs; a key followed by another `-`/`--` token (or
@@ -107,15 +99,15 @@ object JobParameters {
           "live in checkpointed state; a non-durable default would reset them)"))
     val defaults = EcommerceStreamJob.JobConfig(checkpointRoot = checkpointRoot)
     defaults.copy(
-      kafkaServers = params.getOrElse(KafkaServersKey, KafkaServersDefault),
+      kafkaServers = params.getOrElse(KafkaServersKey, defaults.kafkaServers),
       topic = params.getOrElse(TopicKey, defaults.topic),
       groupId = params.getOrElse(GroupIdKey, defaults.groupId),
       startingOffsets = params.getOrElse(StartingOffsetsKey, defaults.startingOffsets),
       triggerMs = params.get(TriggerMsKey).map(_.toLong).getOrElse(defaults.triggerMs),
-      db = ConnConfig(
-        url = params.getOrElse(DatabaseUrlKey, JdbcUrlDefault),
-        user = params.getOrElse(DatabaseUserKey, DatabaseUserDefault),
-        password = params.getOrElse(DatabasePasswordKey, DatabasePasswordDefault)))
+      db = defaults.db.copy(
+        url = params.getOrElse(DatabaseUrlKey, defaults.db.url),
+        user = params.getOrElse(DatabaseUserKey, defaults.db.user),
+        password = params.getOrElse(DatabasePasswordKey, defaults.db.password)))
   }
 
   /** One-call config loading: args + optional properties file → config. */

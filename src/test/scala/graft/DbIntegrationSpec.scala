@@ -14,9 +14,9 @@ import graft.sinks.JdbcUpsert.ConnConfig
   *  - env ABSENT (this offline sandbox): the failure mode is pinned —
   *    a loud driver/connection error, never a silent no-op — and the
   *    gap is documented here instead of hidden. The full writer body
-  *    (batch flush, rollback/reconnect, retry exhaustion, epoch
-  *    ledger) is executed by JdbcUpsertSpec/JdbcExecSpec against the
-  *    recording FakeJdbc driver either way.
+  *    (batch flush, rollback/reconnect, retry exhaustion, idempotent
+  *    replay) is executed by JdbcUpsertExecSpec against the recording
+  *    FakeJdbc driver either way.
   *
   * Deployment: `GRAFT_DATABASE_URL=jdbc:postgresql://host/db`
   * `GRAFT_DATABASE_USER`/`GRAFT_DATABASE_PASSWORD` as needed, with

@@ -19,10 +19,9 @@ import graft.sources.IncrementalFiles
   * classifier gate, folds the gated survivors into the standing
   * near-dup labeling via within + across pairs and
   * [[Dedup.mergeComponents]], and returns the manifest rows the caller
-  * commits ATOMICALLY with its outputs (the
-  * `JdbcUpsert.appendExactlyOnce` ledger posture — the sink side of
-  * that contract is executed branch-by-branch in JdbcUpsertExecSpec;
-  * here the contract under test is the pipeline's replay shape).
+  * commits ATOMICALLY with its outputs: an uncommitted round is simply
+  * re-read and recomputed, so the contract under test is the pipeline's
+  * replay shape.
   *
   * The governing assertion is the merge theorem end-to-end: after N
   * increments, the standing labels equal a FROM-SCRATCH recompute over
@@ -184,7 +183,7 @@ class IncrementalCurationSpec extends SparkSpec {
     val manifest1 = m1.select("path")
 
     // replay round 1 with the UNCOMMITTED manifest: same files, same
-    // labels — the retry is deterministic, the ledger decides afresh
+    // labels — the retry is deterministic, the manifest decides afresh
     val r1b = processIncrement(landing, Seq.empty[String].toDF("path"), None)
     assert(labelSet(r1b.get._2) === l1)
 

@@ -216,62 +216,4 @@ class JdbcUpsertExecSpec extends SparkSpec {
       "ddl:sales_per_day", "ddl:sales_per_month"))
     assert(db.eventLog.last === "close")
   }
-
-  // ----- effectively-exactly-once epoch ledger -----
-
-  test("epoch ledger: replayed additive epoch applies exactly once") {
-    val db = FakeDb.fresh("xonce")
-    JdbcUpsert.runDdl(FakeDb.cfg("xonce"), Seq(JdbcUpsert.ledgerDdl))
-    val df = mkDf(300).repartition(3)
-    // the additive statement is a bare keyless INSERT — genuinely
-    // non-idempotent (no ON CONFLICT to converge a replay)
-    assert(JdbcUpsert.appendSql("facts", Seq("k", "v")) ===
-      "INSERT INTO facts (k, v) VALUES (?, ?)")
-    // forced FULL-EPOCH replay (restart-from-checkpoint shape): same
-    // query, same epoch, same deterministic partitioning
-    JdbcUpsert.appendExactlyOnce(df, "facts", FakeDb.cfg("xonce"), "q1", 7L)
-    assert(db.rowsOf("facts").size === 300)
-    JdbcUpsert.appendExactlyOnce(df, "facts", FakeDb.cfg("xonce"), "q1", 7L)
-    assert(db.rowsOf("facts").size === 300, "replayed epoch must not double")
-    // the next epoch and a different query both apply
-    JdbcUpsert.appendExactlyOnce(df, "facts", FakeDb.cfg("xonce"), "q1", 8L)
-    assert(db.rowsOf("facts").size === 600)
-    JdbcUpsert.appendExactlyOnce(df, "facts", FakeDb.cfg("xonce"), "q2", 7L)
-    assert(db.rowsOf("facts").size === 900)
-    // ledger state: one row per APPLIED (query, epoch, partition) —
-    // three applied epochs × three partitions; the replay adds none
-    assert(db.rowsOf(JdbcUpsert.ledgerTable).size === 9)
-    // replay skips are visible as executeUpdate:0 claims
-    assert(db.eventLog.count(_ == "executeUpdate:0") === 3)
-  }
-
-  test("epoch ledger: mid-epoch failure rolls back rows AND claim; retry re-applies fully") {
-    val db = FakeDb.fresh("xfail")
-    val df = mkDf(200).repartition(1)
-    db.failExecuteBatches = 1
-    // no in-task retry on this path: the failure surfaces (task-retry
-    // unit), with the ledger claim rolled back alongside the rows
-    intercept[Exception] {
-      JdbcUpsert.appendExactlyOnce(df, "facts", FakeDb.cfg("xfail"), "q", 1L)
-    }
-    assert(db.rowsOf("facts").isEmpty, "failed epoch leaves nothing")
-    assert(db.rowsOf(JdbcUpsert.ledgerTable).isEmpty, "claim rolled back")
-    assert(db.eventLog.count(_ == "rollback") === 1)
-    // the task retry (re-invocation) applies the epoch exactly once
-    JdbcUpsert.appendExactlyOnce(df, "facts", FakeDb.cfg("xfail"), "q", 1L)
-    assert(db.rowsOf("facts").size === 200)
-    assert(db.rowsOf(JdbcUpsert.ledgerTable).size === 1)
-  }
-
-  test("epoch ledger: foreachBatch shape drives an exactly-once streaming append") {
-    val db = FakeDb.fresh("xstream")
-    val sink = JdbcUpsert.foreachBatchAppend("agg", FakeDb.cfg("xstream"), "rev-stream")
-    // three epochs, the middle one delivered twice (restart replay)
-    sink(Seq(("a", 1)).toDF("k", "v"), 0L)
-    sink(Seq(("b", 2)).toDF("k", "v"), 1L)
-    sink(Seq(("b", 2)).toDF("k", "v"), 1L)
-    sink(Seq(("c", 3)).toDF("k", "v"), 2L)
-    val vals = db.rowsOf("agg").map(r => (r("k"), r("v")))
-    assert(vals.sortBy(_.toString) === Vector(("a", 1), ("b", 2), ("c", 3)))
-  }
 }

@@ -52,6 +52,10 @@ class JobParametersSpec extends AnyFunSuite {
     assert(cfg.db.user === "postgres")                    // :71 (unswapped)
     assert(cfg.db.password === "postgres")                // :72
     assert(cfg.topic === "financial_transactions")
+    // JobConfig is the one home of these defaults
+    val plain = EcommerceStreamJob.JobConfig(checkpointRoot = "/c")
+    assert(plain.db.url === cfg.db.url)
+    assert(plain.kafkaServers === cfg.kafkaServers)
   }
 
   test("checkpointRoot is required — no silent non-durable default") {

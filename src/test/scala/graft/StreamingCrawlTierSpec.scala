@@ -23,8 +23,8 @@ import graft.streaming.Windows
   * end-state must equal the batch chain over the distinct pages landed
   * so far — no new oracle needed, batch equivalence is the oracle.
   * (StreamRestartSpec pins the generic restart/late-data semantics;
-  * this spec pins the crawl-tier COMPOSITION on top of them. The JDBC
-  * exactly-once epoch-ledger sink this job would use in production is
+  * this spec pins the crawl-tier COMPOSITION on top of them. The
+  * keyed idempotent upsert a production sink would replay through is
   * executed branch-by-branch in JdbcUpsertExecSpec.)
   */
 class StreamingCrawlTierSpec extends SparkSpec {

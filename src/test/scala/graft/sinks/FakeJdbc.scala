@@ -42,8 +42,6 @@ object FakeDb {
 
   final class Db(val name: String) {
     val tables = mutable.Map[String, TableState]()
-    /** Synthetic key counter for keyless (additive) inserts. */
-    var rowSeq = 0L
     /** Ordered op log: connect / prepare / setAutoCommit:b /
       * executeBatch:n / executeBatch:FAIL / commit / rollback / close /
       * ddl:<table>. */
@@ -106,8 +104,8 @@ final class FakeDriver extends Driver {
 }
 
 object FakeConnection {
-  /** keyCols empty = ADDITIVE (keyless plain INSERT — every committed
-    * row appends under a synthetic key, duplicates and all). */
+  /** One `executeBatch`'s rows, keyed by `keyCols` (always non-empty:
+    * the writer only emits `ON CONFLICT` upserts). */
   final case class Staged(table: String, columns: Vector[String],
       keyCols: Vector[String], doNothing: Boolean, rows: Vector[Vector[Any]])
 
@@ -123,20 +121,6 @@ object FakeConnection {
     private var closed = false
 
     def stage(s: Staged): Unit = synchronized { staged += s }
-
-    /** Is `key` present for `table`, committed OR staged on THIS
-      * connection — the visibility a transactional ON CONFLICT check
-      * needs (ledger rows written earlier in the same txn count). */
-    def keyVisible(table: String, keyCols: Vector[String],
-        key: Vector[Any]): Boolean = {
-      val stagedHit = synchronized {
-        staged.exists(s => s.table == table && s.keyCols == keyCols &&
-          s.rows.exists(r => s.keyCols.map(c => r(s.columns.indexOf(c))) == key))
-      }
-      stagedHit || db.synchronized {
-        db.tables.get(table).exists(_.rows.contains(key))
-      }
-    }
 
     override def invoke(proxy: AnyRef, m: Method, rawArgs: Array[AnyRef]): AnyRef = {
       val args = if (rawArgs == null) Array.empty[AnyRef] else rawArgs
@@ -167,9 +151,7 @@ object FakeConnection {
           val ts = db.tables.getOrElseUpdate(s.table, new FakeDb.TableState)
           val keyIdx = s.keyCols.map(s.columns.indexOf)
           s.rows.foreach { r =>
-            val key =
-              if (s.keyCols.isEmpty) { db.rowSeq += 1; Vector[Any]("__row__", db.rowSeq) }
-              else keyIdx.map(r(_))
+            val key = keyIdx.map(r(_))
             ts.rows.get(key) match {
               case Some(existing) if !s.doNothing =>
                 s.columns.zipWithIndex.foreach { case (c, i) =>
@@ -192,16 +174,11 @@ object FakePrepared {
   // Matches exactly what JdbcUpsert.upsertSql emits.
   private val InsertRe =
     """INSERT INTO (\S+) \(([^)]*)\) VALUES \([^)]*\) ON CONFLICT \(([^)]*)\) (DO NOTHING|DO UPDATE SET .+)""".r
-  // ... and the keyless additive form JdbcUpsert.appendSql emits.
-  private val PlainInsertRe =
-    """INSERT INTO (\S+) \(([^)]*)\) VALUES \([^)]*\)""".r
 
   def make(db: FakeDb.Db, conn: FakeConnection.Handler, sql: String): PreparedStatement = {
     val (table, columns, keyCols, doNothing) = sql match {
       case InsertRe(t, cols, keys, action) =>
         (t, cols.split(",\\s*").toVector, keys.split(",\\s*").toVector, action == "DO NOTHING")
-      case PlainInsertRe(t, cols) =>
-        (t, cols.split(",\\s*").toVector, Vector.empty[String], false)
       case _ => throw new SQLException(s"unparseable upsert SQL: $sql")
     }
     val h = new Handler(db, conn, table, columns, keyCols, doNothing)
@@ -229,22 +206,6 @@ object FakePrepared {
           null
         case "addBatch" => batch += params.toVector; null
         case "clearBatch" => batch.clear(); null
-        case "executeUpdate" =>
-          // single-row transactional insert with conflict visibility —
-          // the epoch-ledger probe: 0 = key already present (committed
-          // or staged in this txn), 1 = staged now
-          val row = params.toVector
-          val applied =
-            if (doNothing && keyCols.nonEmpty &&
-                conn.keyVisible(table, keyCols,
-                  keyCols.map(c => row(columns.indexOf(c))))) 0
-            else {
-              conn.stage(FakeConnection.Staged(table, columns, keyCols,
-                doNothing, Vector(row)))
-              1
-            }
-          db.record(s"executeUpdate:$applied")
-          Integer.valueOf(applied)
         case "executeBatch" =>
           val fail = db.synchronized {
             if (db.failExecuteBatches > 0) { db.failExecuteBatches -= 1; true } else false
